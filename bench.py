@@ -196,7 +196,7 @@ def main() -> None:
     )
 
     timings["corpus_build_fused"] = timed_median(
-        lambda: build_training_corpus(pages, fused=True)
+        lambda: build_training_corpus(pages)
     )
     extras["corpus_build_docs_per_sec"] = round(
         n_pages / timings["corpus_build_fused"], 1

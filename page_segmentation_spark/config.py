@@ -35,12 +35,40 @@ HEADING_TAGS = frozenset({"h1", "h2", "h3", "h4", "h5", "h6"})
 DEFAULT_TARGET_BLOCK_CHARS = 80
 
 
+#: post-processor alias -> canonical stage name, mirroring the
+#: reference's alias table (lib/postprocess.py:56-64).
+POSTPROCESSOR_ALIASES = {
+    "ccmajority": "cc_majority",
+    "cc_majority": "cc_majority",
+    "ccvote": "cc_majority",
+    "voteconnectedcomponents": "cc_majority",
+    "votecomponents": "cc_majority",
+    "boundingboxes": "bounding_boxes",
+    "bbox": "bounding_boxes",
+    "none": "none",
+}
+
+
+def postprocessor_key(name: str) -> str:
+    """Canonical stage name of one ``post_process`` entry; KeyError if
+    unknown.  Both engines resolve names here (vote.find_postprocessor,
+    oracle.extract_document), so an alias runs the same stage in both."""
+    key = name.lower().replace("-", "_").replace("__", "_")
+    try:
+        return POSTPROCESSOR_ALIASES[key]
+    except KeyError:
+        raise KeyError(
+            f"unknown post-processor {name!r}; "
+            f"available: {sorted(POSTPROCESSOR_ALIASES)}"
+        ) from None
+
+
 @dataclass(frozen=True)
 class ExtractSettings:
     """Job settings for the extraction pipeline (PredictSettings analog).
 
     ``post_process`` is an ordered list of named DataFrame->DataFrame
-    stages resolved through
+    stages resolved through :func:`postprocessor_key` into
     :data:`page_segmentation_spark.operators.vote.POSTPROCESSORS`
     (the analog of the reference postprocessor registry,
     reference lib/postprocess.py:45-64).

@@ -84,6 +84,13 @@ def with_lang_id(
     the same expression as ``__pss_g_padded``).  Step (1) is then
     skipped and the pad/lower pass is not paid a second time; the
     padded column is consumed, NOT emitted in the output."""
+    if padded_col is not None and (
+        padded_col not in df.columns or padded_col == text_col
+    ):
+        raise ValueError(
+            f"with_lang_id: padded_col {padded_col!r} must be a column of "
+            f"df other than text_col {text_col!r}"
+        )
     cols = [F.col(c) for c in df.columns if c != padded_col]
     if padded_col is None:
         padded = F.concat(F.lit(" "), F.lower(F.col(text_col)), F.lit(" "))
@@ -874,6 +881,10 @@ def gopher_quality(
     codegen, embarrassingly parallel at any corpus size; the corpus-wide
     repetition rules of the same paper live in
     :func:`repetition_signals` (those need aggregation, these do not)."""
+    if lines_col is not None and lines_col not in df.columns:
+        raise ValueError(
+            f"gopher_quality: unknown lines_col {lines_col!r}"
+        )
     text = F.col(text_col)
     # stage the text-wide derivations (trim / both splits / padded-lower)
     # as REAL columns: each is referenced by several signal columns
@@ -885,7 +896,7 @@ def gopher_quality(
         F.when(
             F.size(F.col(lines_col)) == 0, F.array(F.lit(""))
         ).otherwise(F.col(lines_col))
-        if lines_col
+        if lines_col is not None
         else F.split(text, "\n")
     )
     df = df.select(

@@ -23,6 +23,7 @@ from typing import Callable, Dict
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
+from page_segmentation_spark.config import postprocessor_key
 from page_segmentation_spark.operators.islands import with_islands
 
 
@@ -160,19 +161,13 @@ def identity(nodes: DataFrame) -> DataFrame:
     return nodes.withColumn("pred", F.col(col))
 
 
-#: name -> stage, mirroring the reference's alias table
-#: (lib/postprocess.py:56-64).
+#: canonical stage name (config.postprocessor_key) -> stage.
 POSTPROCESSORS: Dict[str, Callable[[DataFrame], DataFrame]] = {
-    "ccmajority": cc_majority,
     "cc_majority": cc_majority,
-    "ccvote": cc_majority,
-    "voteconnectedcomponents": cc_majority,
-    "votecomponents": cc_majority,
-    "boundingboxes": bounding_boxes,
-    "bbox": bounding_boxes,
+    "bounding_boxes": bounding_boxes,
     "none": identity,
 }
 
 
 def find_postprocessor(key: str) -> Callable[[DataFrame], DataFrame]:
-    return POSTPROCESSORS[key.lower().replace("-", "_").replace("__", "_")]
+    return POSTPROCESSORS[postprocessor_key(key)]

@@ -33,6 +33,7 @@ from page_segmentation_spark.config import (
     HEADING_TAGS,
     ExtractSettings,
     derive_thresholds,
+    postprocessor_key,
 )
 from page_segmentation_spark.functions import scorer_core as sc
 from page_segmentation_spark.page_parse import parse_page
@@ -374,7 +375,11 @@ def extract_document(
         pdf_password=settings.pdf_password,
     )
     preds, med = score_nodes(nodes, arch)
-    if "cc_majority" in settings.post_process:
+    # the Spark chain's vote recomputes pred from pred_raw and the other
+    # stages leave pred as is, so it votes once iff any entry names it
+    if any(
+        postprocessor_key(n) == "cc_majority" for n in settings.post_process
+    ):
         preds = cc_majority_vote(nodes, preds)
     spans = SPAN_CUTTERS[settings.span_former](nodes, preds, settings, med)
     texts: List[str] = []

@@ -22,7 +22,7 @@ Scale properties (designed for a 1000-executor / 100 TB run):
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame
+from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 from page_segmentation_spark.config import ExtractSettings
@@ -62,17 +62,23 @@ def classified_nodes(
     return nodes
 
 
-def extract(pages: DataFrame, settings: ExtractSettings | None = None) -> DataFrame:
-    """Full pipeline -> (url, extracted_text, spans, n_nodes).
-
-    Documents whose HTML yields zero nodes (empty body) still appear, with
-    extracted_text = '' — the oracle contract."""
+def _assemble(
+    pages: DataFrame,
+    settings: ExtractSettings | None,
+    node_text: Column,
+    out_name: str,
+) -> DataFrame:
+    """Classified/spanned node table grouped back to one row per url:
+    (url, out_name, spans, n_nodes), where ``out_name`` is the ordered
+    separator-join of ``node_text`` (a per-node column named ``text``)
+    over the selected nodes."""
     settings = settings or ExtractSettings()
     nodes = classified_nodes(pages, settings)
     spanned = SPAN_FORMERS[settings.span_former](nodes, settings)
 
     text_structs = F.when(
-        F.col("selected"), F.struct("node_idx", "text")
+        F.col("selected"),
+        F.struct(F.col("node_idx"), node_text),
     )
     span_structs = F.when(
         F.col("in_kept_span"),
@@ -92,12 +98,20 @@ def extract(pages: DataFrame, settings: ExtractSettings | None = None) -> DataFr
                 lambda x: x.getField("text"),
             ),
             settings.separator,
-        ).alias("extracted_text"),
+        ).alias(out_name),
         F.array_sort(F.array_distinct(F.collect_list(span_structs))).alias(
             "spans"
         ),
         F.count(F.when(F.col("node_idx") >= 0, F.lit(1))).alias("n_nodes"),
     )
+
+
+def extract(pages: DataFrame, settings: ExtractSettings | None = None) -> DataFrame:
+    """Full pipeline -> (url, extracted_text, spans, n_nodes).
+
+    Documents whose HTML yields zero nodes (empty body) still appear, with
+    extracted_text = '' — the oracle contract."""
+    return _assemble(pages, settings, F.col("text"), "extracted_text")
 
 
 def extract_markdown(
@@ -112,37 +126,9 @@ def extract_markdown(
     join.  Output: (url, extracted_markdown, spans, n_nodes)."""
     from page_segmentation_spark.functions.markdown import md_prefix_expr
 
-    settings = settings or ExtractSettings()
-    nodes = classified_nodes(pages, settings)
-    spanned = SPAN_FORMERS[settings.span_former](nodes, settings)
-
-    md_structs = F.when(
-        F.col("selected"),
-        F.struct(
-            F.col("node_idx"),
-            F.concat(md_prefix_expr(F.col("tag")), F.col("text")).alias(
-                "md"
-            ),
-        ),
-    )
-    span_structs = F.when(
-        F.col("in_kept_span"),
-        F.struct(
-            F.col("span_start").alias("start"),
-            F.col("span_end").alias("end"),
-            F.col("span_main").alias("n_main"),
-        ),
-    )
-    return spanned.groupBy("url").agg(
-        F.array_join(
-            F.transform(
-                F.array_sort(F.collect_list(md_structs)),
-                lambda x: x.getField("md"),
-            ),
-            settings.separator,
-        ).alias("extracted_markdown"),
-        F.array_sort(F.array_distinct(F.collect_list(span_structs))).alias(
-            "spans"
-        ),
-        F.count(F.when(F.col("node_idx") >= 0, F.lit(1))).alias("n_nodes"),
+    return _assemble(
+        pages,
+        settings,
+        F.concat(md_prefix_expr(F.col("tag")), F.col("text")).alias("text"),
+        "extracted_markdown",
     )

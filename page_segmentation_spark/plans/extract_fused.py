@@ -19,7 +19,9 @@ same ``page_parse`` / ``scorer_core`` / span semantics the declarative
 plan mirrors; byte-identity between the two plans is pinned by tests
 and the ``extract_fused_flagship`` driver row).
 
-Trade-offs (why this is an ALTERNATE, not a replacement):
+The corpus funnel (plans/training_corpus.py) always extracts through
+this plan.  Trade-offs (why the declarative plan stays for node-level
+work):
 
 * no exploded node table — downstream per-node analytics (metrics,
   debug overlays, GT joins) want the declarative plan's intermediate;
@@ -41,15 +43,13 @@ instead of a driver loop.
 
 from __future__ import annotations
 
-from typing import Iterator
+from typing import Callable, Iterator
 
 import pyarrow as pa
 from pyspark.sql import DataFrame
 
-from page_segmentation_spark.config import ExtractSettings
+from page_segmentation_spark.config import ExtractSettings, postprocessor_key
 
-#: output schema — field-for-field identical to plans/extract.extract()
-#: (asserted by test_extract_fused.test_schema_identical).
 _SPAN_T = pa.struct(
     [
         pa.field("start", pa.int64()),
@@ -57,44 +57,21 @@ _SPAN_T = pa.struct(
         pa.field("n_main", pa.int64()),
     ]
 )
-ARROW_SCHEMA = pa.schema(
-    [
-        pa.field("url", pa.string()),
-        pa.field("extracted_text", pa.string()),
-        pa.field("spans", pa.list_(_SPAN_T)),
-        pa.field("n_nodes", pa.int64()),
-    ]
-)
-OUT_SCHEMA = (
-    "url string, extracted_text string, "
-    "spans array<struct<start:bigint,end:bigint,n_main:bigint>>, "
-    "n_nodes bigint"
-)
-_MD_ARROW_SCHEMA = pa.schema(
-    [
-        pa.field("url", pa.string()),
-        pa.field("extracted_markdown", pa.string()),
-        pa.field("spans", pa.list_(_SPAN_T)),
-        pa.field("n_nodes", pa.int64()),
-    ]
-)
-MD_OUT_SCHEMA = (
-    "url string, extracted_markdown string, "
-    "spans array<struct<start:bigint,end:bigint,n_main:bigint>>, "
-    "n_nodes bigint"
-)
 
 
-def extract_fused(
-    pages: DataFrame, settings: ExtractSettings | None = None
+def _fused(
+    pages: DataFrame,
+    settings: ExtractSettings | None,
+    extract_one: Callable,
+    text_field: str,
 ) -> DataFrame:
-    """Fused single-stage extraction -> (url, extracted_text, spans,
-    n_nodes), byte-identical to :func:`plans.extract.extract` for the
-    same settings.  Supports every architecture AND every registered
-    span former: the shared single-document chain dispatches through
-    ``oracle.SPAN_CUTTERS`` (default / xycut / morphological — the
-    single-doc twins of operators.spans.SPAN_FORMERS), so the crawl
-    path accepts the same configs as the declarative plan."""
+    """One mapInArrow stage running ``extract_one`` (an oracle
+    single-document chain) per page -> (url, text_field, spans,
+    n_nodes).  Every registry name the kernel looks up is resolved
+    here, so a bad setting raises on the driver, not in an executor."""
+    from page_segmentation_spark.functions.architectures import (
+        find_architecture,
+    )
     from page_segmentation_spark.oracle import SPAN_CUTTERS
 
     settings = settings or ExtractSettings()
@@ -103,21 +80,38 @@ def extract_fused(
             f"unknown span_former {settings.span_former!r}: "
             f"{sorted(SPAN_CUTTERS)}"
         )
+    find_architecture(settings.architecture)
+    for name in settings.post_process:
+        postprocessor_key(name)
+    # field-for-field identical to the declarative plan's output
+    # (test_extract_fused.test_schema_names_and_types_identical)
+    arrow_schema = pa.schema(
+        [
+            pa.field("url", pa.string()),
+            pa.field(text_field, pa.string()),
+            pa.field("spans", pa.list_(_SPAN_T)),
+            pa.field("n_nodes", pa.int64()),
+        ]
+    )
+    ddl = (
+        f"url string, {text_field} string, "
+        "spans array<struct<start:bigint,end:bigint,n_main:bigint>>, "
+        "n_nodes bigint"
+    )
     pruned = pages.select("url", "html")
 
     def kernel(
         batches: Iterator[pa.RecordBatch],
     ) -> Iterator[pa.RecordBatch]:
-        # executor-side import: resolved from the shipped package zip
-        from page_segmentation_spark.oracle import extract_document
-
+        # extract_one pickles by reference: executors import it from
+        # the shipped package zip
         for batch in batches:
             d = batch.to_pydict()
             urls, texts, spans_col, n_nodes = [], [], [], []
             for url, html in zip(d["url"], d["html"]):
-                r = extract_document(html or b"", settings)
+                r = extract_one(html or b"", settings)
                 urls.append(url)
-                texts.append(r["extracted_text"])
+                texts.append(r[text_field])
                 spans_col.append(
                     [
                         {"start": s, "end": e, "n_main": c}
@@ -132,10 +126,25 @@ def extract_fused(
                     pa.array(spans_col, type=pa.list_(_SPAN_T)),
                     pa.array(n_nodes, type=pa.int64()),
                 ],
-                schema=ARROW_SCHEMA,
+                schema=arrow_schema,
             )
 
-    return pruned.mapInArrow(kernel, schema=OUT_SCHEMA)
+    return pruned.mapInArrow(kernel, schema=ddl)
+
+
+def extract_fused(
+    pages: DataFrame, settings: ExtractSettings | None = None
+) -> DataFrame:
+    """Fused single-stage extraction -> (url, extracted_text, spans,
+    n_nodes), byte-identical to :func:`plans.extract.extract` for the
+    same settings.  Supports every architecture AND every registered
+    span former: the shared single-document chain dispatches through
+    ``oracle.SPAN_CUTTERS`` (default / xycut / morphological — the
+    single-doc twins of operators.spans.SPAN_FORMERS), so the crawl
+    path accepts the same configs as the declarative plan."""
+    from page_segmentation_spark.oracle import extract_document
+
+    return _fused(pages, settings, extract_document, "extracted_text")
 
 
 def extract_markdown_fused(
@@ -147,45 +156,8 @@ def extract_markdown_fused(
     extraction's selected nodes and the shared MD_PREFIXES map), so
     crawl-scale jobs get structured output at fused-plan throughput.
     Output: (url, extracted_markdown, spans, n_nodes)."""
-    from page_segmentation_spark.oracle import SPAN_CUTTERS
+    from page_segmentation_spark.oracle import extract_document_markdown
 
-    settings = settings or ExtractSettings()
-    if settings.span_former not in SPAN_CUTTERS:
-        raise ValueError(
-            f"unknown span_former {settings.span_former!r}: "
-            f"{sorted(SPAN_CUTTERS)}"
-        )
-    pruned = pages.select("url", "html")
-
-    def kernel(
-        batches: Iterator[pa.RecordBatch],
-    ) -> Iterator[pa.RecordBatch]:
-        from page_segmentation_spark.oracle import (
-            extract_document_markdown,
-        )
-
-        for batch in batches:
-            d = batch.to_pydict()
-            urls, mds, spans_col, n_nodes = [], [], [], []
-            for url, html in zip(d["url"], d["html"]):
-                r = extract_document_markdown(html or b"", settings)
-                urls.append(url)
-                mds.append(r["extracted_markdown"])
-                spans_col.append(
-                    [
-                        {"start": s, "end": e, "n_main": c}
-                        for (s, e, c) in r["spans"]
-                    ]
-                )
-                n_nodes.append(r["n_nodes"])
-            yield pa.RecordBatch.from_arrays(
-                [
-                    pa.array(urls, type=pa.string()),
-                    pa.array(mds, type=pa.string()),
-                    pa.array(spans_col, type=pa.list_(_SPAN_T)),
-                    pa.array(n_nodes, type=pa.int64()),
-                ],
-                schema=_MD_ARROW_SCHEMA,
-            )
-
-    return pruned.mapInArrow(kernel, schema=MD_OUT_SCHEMA)
+    return _fused(
+        pages, settings, extract_document_markdown, "extracted_markdown"
+    )

@@ -9,14 +9,14 @@ crawl pages of the input-hint shape (url, warc_ts, html, text, lang):
       -> language ID / token count / content fingerprint
       -> exact dedup (keep min-url per fingerprint)
 
-Scale shape at 10^12 documents: the extraction stage contributes its
-single url-keyed Exchange (or zero with the fused plan); C4, Gopher,
-language ID, token counting, and fingerprinting are all zero-shuffle
-Catalyst projections fused into the same stage; the only additional
-shuffle in the whole corpus build is the dedup hash partition on the
-16-hex-char fingerprint (narrow rows: fingerprints + urls).  Every
-filter drops rows BEFORE the dedup shuffle, so the expensive exchange
-sees only surviving documents.
+Scale shape at 10^12 documents: extraction is the zero-shuffle fused
+plan (plans/extract_fused — one mapInArrow stage, byte-identical to the
+declarative plan per url); C4, Gopher, language ID, token counting, and
+fingerprinting are all zero-shuffle Catalyst projections fused into the
+same stage; the ONLY shuffle in the whole corpus build is the dedup
+hash partition on the 16-hex-char fingerprint (narrow rows:
+fingerprints + urls).  Every filter drops rows BEFORE the dedup
+shuffle, so the expensive exchange sees only surviving documents.
 
 Determinism: gate decisions are made on unrounded values; the dedup
 keeps the lexicographic-min url per fingerprint (same total order in
@@ -34,14 +34,13 @@ from page_segmentation_spark.functions.text import (
     gopher_quality,
     with_lang_id,
 )
-from page_segmentation_spark.plans.extract import extract
+from page_segmentation_spark.plans.extract_fused import extract_fused
 
 
 def corpus_features(
     pages: DataFrame,
     c4_opts: dict | None = None,
     gopher_opts: dict | None = None,
-    fused: bool = False,
 ) -> DataFrame:
     """The STATELESS part of the funnel — extraction, C4 and Gopher
     filters, language ID, token count, and content fingerprint, one row
@@ -51,15 +50,9 @@ def corpus_features(
     Shared verbatim by the batch plan (:func:`build_training_corpus`
     adds the fingerprint-window dedup) and the streaming plan
     (``streaming.corpus_stream.stream_training_corpus`` adds stateful
-    cross-batch first-seen dedup); with ``fused=True`` every stage here
-    is stream-safe (one mapInArrow + projections, zero shuffle)."""
-    if fused:
-        from page_segmentation_spark.plans.extract_fused import extract_fused
-
-        ext = extract_fused(pages)
-    else:
-        ext = extract(pages)
-    return _funnel_from_extracted(ext, c4_opts, gopher_opts)
+    cross-batch first-seen dedup); every stage here is stream-safe (one
+    mapInArrow + projections, zero shuffle)."""
+    return _funnel_from_extracted(extract_fused(pages), c4_opts, gopher_opts)
 
 
 def corpus_features_from_text(
@@ -143,7 +136,6 @@ def build_training_corpus(
     c4_opts: dict | None = None,
     gopher_opts: dict | None = None,
     dedup: bool = True,
-    fused: bool = False,
     neardup: bool = False,
     neardup_opts: dict | None = None,
     from_text: bool = False,
@@ -156,15 +148,17 @@ def build_training_corpus(
     code objects as the pages path.
 
     Returns one row per SURVIVING document:
-    (url, lang, n_tokens, content_fp, clean_text).
+    (url, lang, n_tokens, content_fp, clean_text).  Input urls must be
+    unique: extraction is the zero-shuffle fused plan
+    (plans/extract_fused), which keeps one row per page — pages sharing
+    a url are NOT merged — and the dedup below relies on url being a
+    row key.
 
     ``c4_opts`` / ``gopher_opts`` are keyword overrides for the two
     filter stages (see their docstrings for rule parameters); pass
     ``dedup=False`` to keep exact duplicates (e.g. when a later
-    MinHash/SimHash pass owns dedup).  ``fused=True`` swaps in the
-    zero-shuffle fused extraction plan (plans/extract_fused —
-    byte-identical output), leaving the dedup fingerprint partition as
-    the funnel's ONLY Exchange — the 1000-executor crawl shape.
+    MinHash/SimHash pass owns dedup).  The dedup fingerprint partition
+    is the funnel's ONLY Exchange — the 1000-executor crawl shape.
 
     ``neardup=True`` appends the full near-duplicate pass after exact
     dedup: MinHash-LSH candidates verified by exact n-gram Jaccard
@@ -178,7 +172,7 @@ def build_training_corpus(
             pages, c4_opts=c4_opts, gopher_opts=gopher_opts
         )
     else:
-        out = corpus_features(pages, c4_opts, gopher_opts, fused)
+        out = corpus_features(pages, c4_opts, gopher_opts)
     if dedup:
         # keep the min-url row per fingerprint via ONE struct-min
         # aggregation (url leads the struct, so lexicographic struct

@@ -79,7 +79,7 @@ def corpus_stream(
     lang); returns a streaming DataFrame of CORPUS_OUTPUT_SCHEMA rows —
     write with ``outputMode("update")`` (emissions are one-shot, so
     append semantics hold at the sink)."""
-    feats = corpus_features(pages, c4_opts, gopher_opts, fused=True)
+    feats = corpus_features(pages, c4_opts, gopher_opts)
     return _first_seen_dedup(feats)
 
 

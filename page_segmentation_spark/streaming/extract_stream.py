@@ -27,23 +27,45 @@ from pyspark.sql import functions as F
 
 from page_segmentation_spark.config import ExtractSettings
 from page_segmentation_spark.plans.extract import extract
+from page_segmentation_spark.plans.extract_fused import extract_fused
 from page_segmentation_spark.sources.pages_schema import PAGES_DDL
 
 
-def _plan_fn(plan: str):
-    """Resolve the per-batch extraction plan: "declarative" (node-table
-    pipeline, one Exchange) or "fused" (zero-shuffle single Arrow stage,
-    plans/extract_fused.py) — byte-identical outputs, so streaming
-    semantics are unchanged either way."""
-    if plan == "declarative":
-        return extract
-    if plan == "fused":
-        from page_segmentation_spark.plans.extract_fused import (
-            extract_fused,
+#: per-batch extraction plan by name: the node-table pipeline (one
+#: Exchange) or the zero-shuffle single Arrow stage — byte-identical
+#: outputs, so streaming semantics are the same either way.
+_PLANS = {"declarative": extract, "fused": extract_fused}
+
+
+def _start_extract_writer(
+    pages: DataFrame,
+    output_path: str,
+    checkpoint_path: str,
+    settings: ExtractSettings | None,
+    trigger_available_now: bool,
+    plan: str,
+):
+    """Start the ``foreachBatch`` extraction writer over a streaming
+    pages DataFrame — the one sink both extract streams share."""
+    if plan not in _PLANS:
+        raise ValueError(f"plan must be one of {sorted(_PLANS)}, got {plan!r}")
+    build = _PLANS[plan]
+
+    def process_batch(batch_df: DataFrame, batch_id: int) -> None:
+        # idempotent: overwrite THIS batch's directory so a post-crash
+        # retry replaces its partial output rather than duplicating it
+        build(batch_df, settings).write.mode("overwrite").parquet(
+            f"{output_path}/batch_id={batch_id}"
         )
 
-        return extract_fused
-    raise ValueError(f"plan must be 'declarative' or 'fused', got {plan!r}")
+    writer = (
+        pages.writeStream.foreachBatch(process_batch)
+        .option("checkpointLocation", checkpoint_path)
+        .outputMode("append")
+    )
+    if trigger_available_now:
+        writer = writer.trigger(availableNow=True)
+    return writer.start()
 
 
 def stream_extract(
@@ -57,29 +79,15 @@ def stream_extract(
 ):
     """Incrementally extract newly-landed page files.  Returns the
     StreamingQuery (caller awaits termination)."""
-    build = _plan_fn(plan)
     pages = (
         spark.readStream.schema(PAGES_DDL)
         .option("maxFilesPerTrigger", 64)
         .parquet(input_path)
     )
-
-    def process_batch(batch_df: DataFrame, batch_id: int) -> None:
-        result = build(batch_df, settings)
-        # idempotent: overwrite THIS batch's directory so a post-crash
-        # retry replaces its partial output rather than duplicating it
-        result.write.mode("overwrite").parquet(
-            f"{output_path}/batch_id={batch_id}"
-        )
-
-    writer = (
-        pages.writeStream.foreachBatch(process_batch)
-        .option("checkpointLocation", checkpoint_path)
-        .outputMode("append")
+    return _start_extract_writer(
+        pages, output_path, checkpoint_path, settings,
+        trigger_available_now, plan,
     )
-    if trigger_available_now:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()
 
 
 def stream_extract_warc(
@@ -124,22 +132,10 @@ def stream_extract_warc(
         F.lit(None).cast("string").alias("text"),
         F.lit(None).cast("string").alias("lang"),
     )
-
-    build = _plan_fn(plan)
-
-    def process_batch(batch_df: DataFrame, batch_id: int) -> None:
-        build(batch_df, settings).write.mode("overwrite").parquet(
-            f"{output_path}/batch_id={batch_id}"
-        )
-
-    writer = (
-        pages.writeStream.foreachBatch(process_batch)
-        .option("checkpointLocation", checkpoint_path)
-        .outputMode("append")
+    return _start_extract_writer(
+        pages, output_path, checkpoint_path, settings,
+        trigger_available_now, plan,
     )
-    if trigger_available_now:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()
 
 
 def crawl_stats_stream(

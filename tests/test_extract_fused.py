@@ -77,6 +77,71 @@ def test_unknown_span_former_rejected(spark):
         extract_fused(pages, ExtractSettings(span_former="nope"))
 
 
+@pytest.mark.parametrize(
+    "settings",
+    [
+        ExtractSettings(architecture="nope"),
+        ExtractSettings(post_process=("nope",)),
+    ],
+    ids=["architecture", "post_process"],
+)
+def test_unknown_registry_name_raises_before_any_job(spark, settings):
+    """A bad architecture or post-processor name fails on the driver
+    while the plan is built (as extract does), not in an executor."""
+    pages = pages_df(spark, 3, partitions=1)
+    sc = spark.sparkContext
+    group = f"fused-fail-fast-{settings.architecture}"
+    sc.setJobGroup(group, "no job may run")
+    try:
+        with pytest.raises(KeyError, match="nope"):
+            extract_fused(pages, settings)
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    assert list(sc.statusTracker().getJobIdsForGroup(group)) == []
+
+
+@pytest.mark.parametrize(
+    "post_process",
+    [("cc_majority",), ("ccmajority",), ("CC-Majority",), ()],
+    ids=["cc_majority", "ccmajority", "CC-Majority", "none"],
+)
+def test_post_process_aliases_agree_across_engines(spark, post_process):
+    """Every alias of the vote runs it in BOTH engines (one shared
+    resolver, config.postprocessor_key); the fixture holds pages the
+    vote changes (datagen ids 155 and 206), so an engine that skipped
+    the vote for an alias would differ here."""
+    from page_segmentation_spark import datagen as dg
+    from page_segmentation_spark.datagen import PAGES_SCHEMA
+    from page_segmentation_spark.oracle import extract_document
+
+    s = ExtractSettings(post_process=post_process)
+    rows = [dg.make_page(i) for i in range(150, 210)]
+    pages = spark.createDataFrame(rows, PAGES_SCHEMA).cache()
+    try:
+        want = {}
+        for r in rows:
+            d = extract_document(r["html"], s)
+            want[r["url"]] = (
+                d["extracted_text"], [tuple(x) for x in d["spans"]],
+                d["n_nodes"],
+            )
+        for plan in (extract, extract_fused):
+            got = {
+                u: (t, [tuple(x) for x in sp], n)
+                for u, (t, sp, n) in _rows(plan(pages, s)).items()
+            }
+            assert got == want, plan.__name__
+    finally:
+        pages.unpersist()
+    # fixture guard: the vote changes at least one page here
+    unvoted = ExtractSettings(post_process=())
+    assert any(
+        extract_document(r["html"])["extracted_text"]
+        != extract_document(r["html"], unvoted)["extracted_text"]
+        for r in rows
+    )
+
+
 @pytest.mark.parametrize("former", ["default", "xycut", "morphological"])
 def test_value_identity_every_span_former(spark, former):
     """Fused-plan parity across the whole span-former registry: the

@@ -946,30 +946,11 @@ def test_build_training_corpus_funnel(spark):
 
 
 def test_build_training_corpus_plan_shape(spark):
-    """Whole funnel = extraction's one url Exchange + ONE dedup Exchange
-    on the fingerprint; C4/Gopher/langid/fingerprint stages add no
-    shuffle and no Python eval beyond the parse kernel."""
-    import re
-
-    from page_segmentation_spark.plans.training_corpus import (
-        build_training_corpus,
-    )
-
-    pages = spark.createDataFrame(
-        [_pipe_page("https://t/a", "One", ["hello there world today."])],
-        "url string, warc_ts timestamp, html binary, text string, lang string",
-    )
-    plan = (
-        build_training_corpus(pages)
-        ._jdf.queryExecution().executedPlan().toString()
-    )
-    assert len(re.findall(r"Exchange hashpartitioning", plan)) == 2, plan
-    assert "BatchEvalPython" not in plan, plan
-
-
-def test_build_training_corpus_fused_identity_and_plan(spark):
-    """fused=True must produce identical rows with the dedup fingerprint
-    partition as the ONLY Exchange in the whole funnel."""
+    """Whole funnel = ONE Exchange, the dedup partition on the
+    fingerprint: extraction is the zero-shuffle fused plan and
+    C4/Gopher/langid/fingerprint add no shuffle and no Python eval
+    beyond the extraction kernel.  Two pages whose text is identical
+    after C4 collapse to the min url."""
     import re
 
     from page_segmentation_spark.plans.training_corpus import (
@@ -991,14 +972,81 @@ def test_build_training_corpus_fused_identity_and_plan(spark):
         ],
         "url string, warc_ts timestamp, html binary, text string, lang string",
     )
-    fused_df = build_training_corpus(pages, fused=True)
+    out = build_training_corpus(pages)
     # plan BEFORE execution (post-collect AQE strings repeat the
     # exchange in their Initial Plan section)
-    plan = fused_df._jdf.queryExecution().executedPlan().toString()
+    plan = out._jdf.queryExecution().executedPlan().toString()
     assert len(re.findall(r"Exchange hashpartitioning", plan)) == 1, plan
     assert "BatchEvalPython" not in plan, plan
-    decl = {tuple(r) for r in build_training_corpus(pages).collect()}
-    assert {tuple(r) for r in fused_df.collect()} == decl
+    assert [r["url"] for r in out.collect()] == ["https://t/a"]
+
+
+def test_build_training_corpus_fused_identity_and_plan(spark):
+    """The funnel's fused extraction must yield the same rows as the
+    same funnel fed by the declarative extraction, while saving that
+    plan's url Exchange: fused = dedup only, declarative = url + dedup."""
+    import re
+
+    from page_segmentation_spark.plans.extract import extract
+    from page_segmentation_spark.plans.training_corpus import (
+        build_training_corpus,
+    )
+
+    body = [
+        "the quick brown fox jumps over the lazy dog and then rests "
+        "with a calm heart near the river bank every day.",
+        "a second paragraph of plain prose keeps the word count up "
+        "and gives the filter something real to keep.",
+        "the third paragraph closes out this little document with "
+        "enough words that every rule passes today.",
+    ]
+    pages = spark.createDataFrame(
+        [
+            _pipe_page("https://t/a", "One", body),
+            _pipe_page("https://t/b", "Two", body),
+            _pipe_page("https://t/c", "Tiny", ["hi."]),
+        ],
+        "url string, warc_ts timestamp, html binary, text string, lang string",
+    )
+    decl_text = extract(pages).select(
+        "url", F.col("extracted_text").alias("text")
+    )
+    for dedup in (True, False):
+        fused_df = build_training_corpus(pages, dedup=dedup)
+        decl_df = build_training_corpus(decl_text, dedup=dedup, from_text=True)
+        if dedup:
+            # plans BEFORE execution (post-collect AQE strings repeat
+            # the exchange in their Initial Plan section)
+            plans = [
+                d._jdf.queryExecution().executedPlan().toString()
+                for d in (fused_df, decl_df)
+            ]
+            n_ex = [len(re.findall(r"Exchange hashpartitioning", p))
+                    for p in plans]
+            assert n_ex == [1, 2], plans
+        fused_rows = {tuple(r) for r in fused_df.collect()}
+        assert fused_rows == {tuple(r) for r in decl_df.collect()}
+        assert {r[0] for r in fused_rows} == (
+            {"https://t/a"} if dedup else {"https://t/a", "https://t/b"}
+        )
+
+
+@pytest.mark.parametrize("padded_col", ["missing", "t"])
+def test_with_lang_id_rejects_bad_padded_col(spark, padded_col):
+    """padded_col must name an existing column other than text_col."""
+    from page_segmentation_spark.functions.text import with_lang_id
+
+    df = spark.createDataFrame([("a b",)], "t string")
+    with pytest.raises(ValueError, match="padded_col"):
+        with_lang_id(df, "t", padded_col=padded_col)
+
+
+def test_gopher_quality_rejects_unknown_lines_col(spark):
+    from page_segmentation_spark.functions.text import gopher_quality
+
+    df = spark.createDataFrame([("u", "a b")], "url string, t string")
+    with pytest.raises(ValueError, match="lines_col"):
+        gopher_quality(df, "url", "t", lines_col="missing")
 
 
 def test_surprisal_buckets_exact(spark):

@@ -350,7 +350,7 @@ def main() -> None:
         "extract": lambda: extract(pages),
         # fused path + corpus funnel tail over materialized extraction
         "fused": lambda: extract_fused(pages),
-        "corpus": lambda: build_training_corpus(pages, fused=True),
+        "corpus": lambda: build_training_corpus(pages),
         "tail_c4": lambda: tail_c4(ext_table()),
         "tail_gopher": lambda: tail_gopher(ext_table()),
         "tail_lang": lambda: tail_lang(ext_table()),

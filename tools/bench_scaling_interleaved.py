@@ -57,7 +57,7 @@ JOBS = {{
     "extract": lambda: extract(pages),
     "fused": lambda: extract_fused(pages),
     "parse": lambda: parse_pages(pages),
-    "corpus": lambda: build_training_corpus(pages, fused=True),
+    "corpus": lambda: build_training_corpus(pages),
 }}
 build = JOBS[job]
 print(f"READY {{n}}", flush=True)

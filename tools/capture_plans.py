@@ -67,9 +67,7 @@ def main() -> None:
         "extract_pdf": lambda: extract(
             pdf_pages_from_documents(spark, SF_DIR)
         ),
-        "corpus_build_fused": lambda: build_training_corpus(
-            pages, fused=True
-        ),
+        "corpus_build_fused": lambda: build_training_corpus(pages),
         "dedup_minhash_lsh": lambda: QUERIES["dedup_minhash_lsh"](
             spark, SF_DIR
         ),

@@ -13,7 +13,7 @@ documents:
     mask output        -> extracted main-content text (byte-exact)
 
 Everything is DataFrame-first: parsing runs in Arrow-batched
-``mapInPandas``; features, scoring, connected components, voting and span
+``mapInArrow``; features, scoring, connected components, voting and span
 formation are pure JVM-side column/window/groupBy expressions so the hot
 path never crosses into per-row Python.
 """

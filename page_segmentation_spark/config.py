@@ -16,7 +16,6 @@ from dataclasses import dataclass, field
 CLS_BOILER = 0
 CLS_MAIN = 1
 CLS_MEDIA = 2
-N_CLASSES = 3
 
 #: Hard cap on emitted nodes per document — the analog of the reference's
 #: ``max_width`` clamp on oversized pages (reference lib/dataset.py:139-143).
@@ -97,7 +96,6 @@ class ExtractSettings:
     architecture: str = "base"
     #: separator used when concatenating node texts (must match oracle).
     separator: str = "\n\n"
-    n_classes: int = N_CLASSES
     max_nodes_per_doc: int = MAX_NODES_PER_DOC
     #: user password for encrypted PDFs (empty = the owner-locked crawl
     #: shape; a wrong password degrades to visible ops, never garbles).

@@ -35,57 +35,6 @@ def _col_flag(col: str, values: frozenset) -> Column:
     ).otherwise(F.lit(0.0))
 
 
-def with_doc_stats(nodes: DataFrame) -> DataFrame:
-    """Per-document aggregates as window columns (no join):
-    char_med (A12), doc char/link totals, n_nodes."""
-    w_doc = Window.partitionBy("url")
-    return (
-        nodes.withColumn(
-            "char_med",
-            F.coalesce(
-                F.expr(
-                    "percentile(CASE WHEN is_fg THEN n_chars END, 0.5)"
-                ).over(w_doc),
-                F.lit(0.0),
-            ),
-        )
-        .withColumn("doc_chars", F.sum("n_chars").over(w_doc))
-        .withColumn("doc_link", F.sum("n_link_chars").over(w_doc))
-        .withColumn("n_nodes", F.count(F.lit(1)).over(w_doc))
-    )
-
-
-def with_context_sums(nodes: DataFrame, arch=None) -> DataFrame:
-    """Sliding integer sums at local (±2), section (±8) and directional
-    (one-sided ±3) ranges — the 1-D conv/pool pyramid (P10).  ``arch``
-    (functions/architectures.Arch) overrides the radii; None = base.
-
-    All frames share one (partition, order) spec: a single sort serves
-    every frame; empty one-sided frames sum to NULL and are coalesced to
-    0 (the oracle returns 0 there).  A prefix-sum + lead/lag variant was
-    A/B'd and showed no robust win over the sliding frames on this box
-    (measurement noise ±2x); sliding is kept for simplicity."""
-    loc_r = sc.LOCAL_RADIUS if arch is None else arch.local_radius
-    sec_r = sc.SECTION_RADIUS if arch is None else arch.section_radius
-    ordered = Window.partitionBy("url").orderBy("node_idx")
-    loc = ordered.rowsBetween(-loc_r, loc_r)
-    sec = ordered.rowsBetween(-sec_r, sec_r)
-    r = sc.DIRECTIONAL_RADIUS if arch is None else arch.directional_radius
-    fwd = ordered.rowsBetween(1, r)
-    bwd = ordered.rowsBetween(-r, -1)
-    z = F.lit(0).cast("long")
-    return (
-        nodes.withColumn("loc_chars", F.sum("n_chars").over(loc))
-        .withColumn("loc_link", F.sum("n_link_chars").over(loc))
-        .withColumn("sec_chars", F.sum("n_chars").over(sec))
-        .withColumn("sec_link", F.sum("n_link_chars").over(sec))
-        .withColumn("fwd_chars", F.coalesce(F.sum("n_chars").over(fwd), z))
-        .withColumn("fwd_link", F.coalesce(F.sum("n_link_chars").over(fwd), z))
-        .withColumn("bwd_chars", F.coalesce(F.sum("n_chars").over(bwd), z))
-        .withColumn("bwd_link", F.coalesce(F.sum("n_link_chars").over(bwd), z))
-    )
-
-
 def with_features(nodes: DataFrame, arch=None) -> DataFrame:
     """Assemble the ordered feature array (must mirror
     scorer_core.build_features exactly — one double division per feature)."""
@@ -131,8 +80,7 @@ def featurize(nodes: DataFrame, arch=None) -> DataFrame:
     per-column ``withColumn`` form planned five Window nodes and two
     sorts.  The per-document aggregates use unbounded frames of the
     ORDERED window: sum/count/percentile over the full partition are
-    order-insensitive, so values are identical to the unordered
-    ``with_doc_stats`` form (kept below for standalone use)."""
+    order-insensitive, so the order adds nothing to their values."""
     loc_r = sc.LOCAL_RADIUS if arch is None else arch.local_radius
     sec_r = sc.SECTION_RADIUS if arch is None else arch.section_radius
     dir_r = sc.DIRECTIONAL_RADIUS if arch is None else arch.directional_radius

@@ -41,23 +41,9 @@ def h32b(col: Column) -> Column:
     return F.conv(F.substring(F.md5(col), 9, 8), 16, 10).cast("long")
 
 
-def h32b_py(s: str) -> int:
-    """Python twin of :func:`h32b` (oracle/test side)."""
-    return int(hashlib.md5(s.encode("utf-8")).hexdigest()[8:16], 16)
-
-
 def h32b_sql(expr: str) -> str:
     """DuckDB twin of :func:`h32b` as a SQL fragment."""
     return f"(('0x' || substr(md5({expr}), 9, 8))::BIGINT)"
-
-
-def minhash_perm(h: Column, a: int, b: int) -> Column:
-    """One universal-hash permutation (a*h + b) mod (2^31-1)."""
-    return (F.lit(a) * h + F.lit(b)) % F.lit(MERSENNE_P)
-
-
-def minhash_perm_sql(hexpr: str, a: int, b: int) -> str:
-    return f"(({a} * {hexpr} + {b}) % {MERSENNE_P})"
 
 
 #: fixed permutation parameters (odd a), deterministic across sides.

@@ -6,12 +6,15 @@ it turns one raw page byte-stream into the "pixel grid in long form" — an
 ordered list of text-block node records.  The *same* function is called by
 
   * the single-node oracle (:mod:`page_segmentation_spark.oracle`), and
-  * the Spark ``mapInPandas`` parse stage
+  * the Spark ``mapInArrow`` parse stage
     (:mod:`page_segmentation_spark.sources.parse`),
 
-so extracted text is byte-identical by construction.  Pure stdlib
-(``html.parser``) — no lxml/bs4 in this environment — and fully
-deterministic: no dict-order dependence, no randomness.
+so extracted text is byte-identical by construction.  Events come from
+the regex tokenizer (:mod:`page_segmentation_spark.html_tokenize`); the
+block collector is an ``html.parser.HTMLParser`` subclass so the stdlib
+parser can drive it as the test-side reference.  Pure stdlib — no
+lxml/bs4 in this environment — and fully deterministic: no dict-order
+dependence, no randomness.
 
 Node record fields (FIXTURES.md §2):
     node_idx  — document-order position (0-based)
@@ -30,6 +33,8 @@ from __future__ import annotations
 import string
 from html.parser import HTMLParser
 from typing import Any, Dict, List
+
+from page_segmentation_spark.html_tokenize import feed_events
 
 # Block-level elements: a new node begins whenever one opens or closes.
 BLOCK_TAGS = frozenset(
@@ -400,16 +405,6 @@ class _BlockCollector(HTMLParser):
         self._flush()
 
 
-#: parser backend: 'tokenizer' (fast regex scanner, html_tokenize.py) or
-#: 'htmlparser' (stdlib html.parser).  Node streams are equal on
-#: well-formed pages (tested corpus-wide); oracle and Spark share this
-#: switch so byte-identity holds under either.  Env-controlled so Spark
-#: workers (which import this module from the shipped zip) honor it.
-import os as _os
-
-PARSER_BACKEND = _os.environ.get("PSS_PARSER_BACKEND", "tokenizer")
-
-
 # -- charset sniffing (deterministic, shared by oracle and Spark) -------
 #
 # Real-crawl pages declare their encoding in <meta charset=...> or
@@ -461,7 +456,7 @@ def decode_page_bytes(raw: bytes) -> str:
 
 
 def parse_html(
-    html: bytes | str, max_nodes: int = 50_000, backend: str | None = None
+    html: bytes | str, max_nodes: int = 50_000
 ) -> List[Dict[str, Any]]:
     """Parse one page into ordered node records.
 
@@ -474,14 +469,8 @@ def parse_html(
         html = decode_page_bytes(bytes(html))
     collector = _BlockCollector(max_nodes=max_nodes)
     try:
-        if (backend or PARSER_BACKEND) == "tokenizer":
-            from page_segmentation_spark.html_tokenize import feed_events
-
-            feed_events(collector, html)
-            collector._flush()
-        else:
-            collector.feed(html)
-            collector.close()
+        feed_events(collector, html)
+        collector._flush()
     except Exception:
         # malformed page: keep whatever was parsed (never fail a batch)
         collector._flush()

@@ -4,11 +4,13 @@ block collector in :mod:`page_segmentation_spark.html_parse`.
 The stdlib ``html.parser`` costs ~half the parse budget in regex-driven
 Python dispatch.  This tokenizer scans with one compiled regex and feeds
 the SAME ``_BlockCollector`` handlers, so node semantics (and therefore
-byte-identity with the oracle) are unchanged — verified by a node-stream
-equality test over the full synthetic corpus and the frozen goldens.
+byte-identity with the oracle) are unchanged — checked against
+html.parser driving the same collector (tests/test_charset.py) and pinned
+by the frozen goldens.
 
-Intentional simplifications vs html.parser (both sides see the parser
-selected by config, so Spark/oracle always agree):
+Intentional simplifications vs html.parser (the oracle and the Spark
+parse stage both run this tokenizer, so they always agree; html.parser
+stays the test-side reference it is checked against):
   * only class/id attributes are materialized (the boilerplate class
     hint is all the collector reads; other attributes are ignored);
   * a ``>`` inside a quoted attribute value terminates the tag early

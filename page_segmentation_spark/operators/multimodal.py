@@ -1,9 +1,10 @@
 """Multimodal column plumbing: opaque binary payloads + typed metadata.
 
 Image/audio/video travel as ``binary`` columns with struct metadata; all
-heavy per-record work runs in Arrow-batched ``mapInPandas`` (the same
-kernel-isolation pattern the reference uses for NumPy/TF decode,
-reference lib/dataset.py:160-198).  The image decode kernel is REAL,
+heavy per-record work is a pure per-payload function run through the
+shared per-record kernel (:func:`page_segmentation_spark.records.map_records`
+— the same kernel-isolation pattern the reference uses for NumPy/TF
+decode, reference lib/dataset.py:160-198).  The image decode kernel is REAL,
 numpy-vectorized (stdlib + numpy only):
 
   * PNG — chunk walk (IHDR/IDAT/IEND), zlib inflate, scanline unfilter
@@ -29,12 +30,13 @@ from __future__ import annotations
 
 import struct
 import zlib
-from typing import Iterator, List, Optional, Tuple
+from typing import List, Optional, Tuple
 
 import numpy as np
-import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
+
+from page_segmentation_spark.records import map_records
 
 MEDIA_META_SCHEMA = (
     "media_type string, width int, height int, n_frames int, "
@@ -247,32 +249,16 @@ def extract_features(
     payload_col: str = "payload",
     id_cols: tuple = ("url", "media_idx"),
 ) -> DataFrame:
-    """mapInPandas feature extraction over binary payloads: Arrow batch
-    in, REAL pixel decode (image_features) per record, typed feature
-    columns out.  Unsupported/undecodable payloads yield NULL features
+    """Feature extraction over binary payloads: REAL pixel decode
+    (image_features) per record, typed feature columns out.
+    Unsupported/undecodable payloads yield one row of NULL features
     (malformed inputs must never fail a batch — same contract as the
     parse front-ends)."""
-    cols = list(id_cols) + [payload_col]
-    pruned = df.select(*cols)
-    out_schema = (
-        ", ".join(f"{c} string" if c == "url" else f"{c} int" for c in id_cols)
-        + ", " + FEATURE_SCHEMA_SUFFIX
+    return map_records(
+        df, id_cols, payload_col,
+        lambda p: [image_features(p) or (None,) * 5],
+        FEATURE_SCHEMA_SUFFIX,
     )
-
-    def kernel(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            feats = [
-                image_features(bytes(p) if p is not None else None)
-                for p in pdf[payload_col]
-            ]
-            res = pdf[list(id_cols)].copy()
-            for j, name in enumerate(
-                ("width", "height", "channels", "px_mean", "fg_ratio")
-            ):
-                res[name] = [f[j] if f is not None else None for f in feats]
-            yield res
-
-    return pruned.mapInPandas(kernel, schema=out_schema)
 
 
 def decode_wav(data: bytes) -> Tuple[int, int, "np.ndarray"]:
@@ -359,28 +345,13 @@ def extract_audio_features(
     payload_col: str = "payload",
     id_cols: tuple = ("url", "media_idx"),
 ) -> DataFrame:
-    """mapInPandas audio feature extraction: the WAV twin of
-    extract_features, same NULL-on-undecodable contract."""
-    cols = list(id_cols) + [payload_col]
-    pruned = df.select(*cols)
-    out_schema = (
-        ", ".join(f"{c} string" if c == "url" else f"{c} int" for c in id_cols)
-        + ", " + AUDIO_FEATURE_SCHEMA_SUFFIX
+    """Audio feature extraction: the WAV twin of extract_features, same
+    NULL-on-undecodable contract."""
+    return map_records(
+        df, id_cols, payload_col,
+        lambda p: [audio_features(p) or (None,) * 6],
+        AUDIO_FEATURE_SCHEMA_SUFFIX,
     )
-    names = ("sample_rate", "channels", "n_frames", "duration_s", "rms", "zcr")
-
-    def kernel(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            feats = [
-                audio_features(bytes(p) if p is not None else None)
-                for p in pdf[payload_col]
-            ]
-            res = pdf[list(id_cols)].copy()
-            for j, name in enumerate(names):
-                res[name] = [f[j] if f is not None else None for f in feats]
-            yield res
-
-    return pruned.mapInPandas(kernel, schema=out_schema)
 
 
 def parse_avi_meta(data: bytes) -> Tuple[int, int, int, int]:
@@ -446,28 +417,13 @@ def extract_video_meta(
     payload_col: str = "payload",
     id_cols: tuple = ("url", "media_idx"),
 ) -> DataFrame:
-    """mapInPandas container-metadata extraction: the AVI twin of
-    extract_features, same NULL-on-undecodable contract."""
-    cols = list(id_cols) + [payload_col]
-    pruned = df.select(*cols)
-    out_schema = (
-        ", ".join(f"{c} string" if c == "url" else f"{c} int" for c in id_cols)
-        + ", " + VIDEO_META_SCHEMA_SUFFIX
+    """Container-metadata extraction: the AVI twin of extract_features,
+    same NULL-on-undecodable contract."""
+    return map_records(
+        df, id_cols, payload_col,
+        lambda p: [video_meta(p) or (None,) * 5],
+        VIDEO_META_SCHEMA_SUFFIX,
     )
-    names = ("width", "height", "n_frames", "fps", "duration_s")
-
-    def kernel(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            feats = [
-                video_meta(bytes(p) if p is not None else None)
-                for p in pdf[payload_col]
-            ]
-            res = pdf[list(id_cols)].copy()
-            for j, name in enumerate(names):
-                res[name] = [f[j] if f is not None else None for f in feats]
-            yield res
-
-    return pruned.mapInPandas(kernel, schema=out_schema)
 
 
 def _avi_chunks(buf: bytes, pos: int, end: int):
@@ -540,57 +496,47 @@ FRAME_FEATURE_SCHEMA_SUFFIX = (
 )
 
 
+def frame_features(
+    payload: Optional[bytes], every_n: int = 10
+) -> Optional[List[Tuple[int, int, int, float, float, float]]]:
+    """Frame sampling + decode + per-frame channel means:
+    (frame_idx, width, height, mean_b, mean_g, mean_r) for every
+    ``every_n``-th frame of an uncompressed AVI payload.  Each frame
+    reduces to exact int64 channel sums (np.sum over uint8) followed by
+    a SINGLE division by w*h — the determinism contract every double in
+    the engine follows.  None when the payload does not decode."""
+    if not payload:
+        return None
+    try:
+        w, h, frames = decode_avi_frames(bytes(payload))
+    except (ValueError, struct.error, IndexError):
+        return None
+    out = []
+    for f_idx in range(0, len(frames), every_n):
+        sums = np.sum(frames[f_idx].reshape(-1, 3), axis=0, dtype=np.int64)
+        out.append(
+            (f_idx, w, h,
+             int(sums[0]) / (w * h),
+             int(sums[1]) / (w * h),
+             int(sums[2]) / (w * h))
+        )
+    return out
+
+
 def extract_frame_features(
     df: DataFrame,
     payload_col: str = "payload",
     id_cols: tuple = ("url", "media_idx"),
     every_n: int = 10,
 ) -> DataFrame:
-    """Frame sampling + decode + per-frame channel means in ONE Arrow
-    stage: every ``every_n``-th frame of each uncompressed AVI payload
-    is decoded and reduced to exact int64 channel sums (np.sum over
-    uint8) followed by a SINGLE division by w*h — the determinism
-    contract every double in the engine follows.  Undecodable payloads
-    emit zero rows (same skip contract as the image/audio kernels:
-    corrupt media must not kill a 100-TB job)."""
-    cols = list(id_cols) + [payload_col]
-    pruned = df.select(*cols)
-    out_schema = (
-        ", ".join(f"{c} string" if c == "url" else f"{c} int" for c in id_cols)
-        + ", " + FRAME_FEATURE_SCHEMA_SUFFIX
+    """Fan-out: one row per sampled frame (:func:`frame_features`).
+    Undecodable payloads emit zero rows (same skip contract as
+    extract_audio_segments: corrupt media must not kill a 100-TB job)."""
+    return map_records(
+        df, id_cols, payload_col,
+        lambda p: frame_features(p, every_n) or [],
+        FRAME_FEATURE_SCHEMA_SUFFIX,
     )
-
-    def kernel(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            out_rows = []
-            for _, row in pdf.iterrows():
-                p = row[payload_col]
-                if p is None:
-                    continue
-                try:
-                    w, h, frames = decode_avi_frames(bytes(p))
-                except (ValueError, struct.error, IndexError):
-                    continue
-                ids = tuple(row[c] for c in id_cols)
-                for f_idx in range(0, len(frames), every_n):
-                    sums = np.sum(
-                        frames[f_idx].reshape(-1, 3), axis=0,
-                        dtype=np.int64,
-                    )
-                    out_rows.append(
-                        ids + (f_idx, w, h,
-                               int(sums[0]) / (w * h),
-                               int(sums[1]) / (w * h),
-                               int(sums[2]) / (w * h))
-                    )
-            yield pd.DataFrame(
-                out_rows,
-                columns=list(id_cols)
-                + ["frame_idx", "width", "height",
-                   "mean_b", "mean_g", "mean_r"],
-            )
-
-    return pruned.mapInPandas(kernel, schema=out_schema)
 
 
 def frame_sample_plan(
@@ -624,6 +570,26 @@ RESIZE_FEATURE_SCHEMA_SUFFIX = (
 )
 
 
+def resized_features(
+    payload: Optional[bytes], out_w: int, out_h: int
+) -> Optional[Tuple[int, int, int, float]]:
+    """decode -> nearest-neighbor resize -> exact channel stats:
+    (width, height, channels, px_mean) of the ``out_w`` x ``out_h``
+    thumbnail — the standard model-input normalization step of a
+    multimodal training pipeline (every vision encoder wants a fixed
+    input grid).  px_mean is an int64 sum over the RESIZED buffer with a
+    single division.  None when the payload does not decode."""
+    if not payload:
+        return None
+    try:
+        w, h, ch, px = decode_image(bytes(payload))
+        small = resize_nearest(px, w, h, ch, out_w, out_h)
+    except (ValueError, zlib.error, struct.error, IndexError):
+        return None
+    total = int(np.sum(small, dtype=np.int64))
+    return out_w, out_h, ch, total / (out_w * out_h * ch)
+
+
 def extract_resized_features(
     df: DataFrame,
     out_w: int,
@@ -631,46 +597,14 @@ def extract_resized_features(
     payload_col: str = "payload",
     id_cols: tuple = ("url", "media_idx"),
 ) -> DataFrame:
-    """decode -> nearest-neighbor resize -> exact channel stats in ONE
-    Arrow stage: the standard thumbnail/model-input normalization step
-    of a multimodal training pipeline (every vision encoder wants a
-    fixed input grid).  px_mean is an int64 sum over the RESIZED buffer
-    with a single division; undecodable payloads emit NULL features
-    (same contract as extract_features)."""
-    cols = list(id_cols) + [payload_col]
-    pruned = df.select(*cols)
-    out_schema = (
-        ", ".join(f"{c} string" if c == "url" else f"{c} int" for c in id_cols)
-        + ", " + RESIZE_FEATURE_SCHEMA_SUFFIX
+    """Thumbnail statistics per payload (:func:`resized_features`);
+    undecodable payloads emit NULL features (same contract as
+    extract_features)."""
+    return map_records(
+        df, id_cols, payload_col,
+        lambda p: [resized_features(p, out_w, out_h) or (None,) * 4],
+        RESIZE_FEATURE_SCHEMA_SUFFIX,
     )
-
-    def kernel(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows = []
-            for _, row in pdf.iterrows():
-                ids = tuple(row[c] for c in id_cols)
-                p = row[payload_col]
-                if p is None:
-                    rows.append(ids + (None,) * 4)
-                    continue
-                try:
-                    w, h, ch, px = decode_image(bytes(p))
-                    small = resize_nearest(px, w, h, ch, out_w, out_h)
-                except (ValueError, struct.error, IndexError):
-                    rows.append(ids + (None,) * 4)
-                    continue
-                total = int(np.sum(small, dtype=np.int64))
-                rows.append(
-                    ids + (out_w, out_h, ch,
-                           total / (out_w * out_h * ch))
-                )
-            yield pd.DataFrame(
-                rows,
-                columns=list(id_cols)
-                + ["width", "height", "channels", "px_mean"],
-            )
-
-    return pruned.mapInPandas(kernel, schema=out_schema)
 
 
 AUDIO_SEGMENT_SCHEMA_SUFFIX = (
@@ -716,30 +650,10 @@ def extract_audio_segments(
     payload_col: str = "payload",
     id_cols: tuple = ("url", "media_idx"),
 ) -> DataFrame:
-    """mapInPandas fan-out: one row per (clip, segment) — the audio twin
-    of extract_frame_features; undecodable payloads emit zero rows."""
-    cols = list(id_cols) + [payload_col]
-    pruned = df.select(*cols)
-    out_schema = (
-        ", ".join(f"{c} string" if c == "url" else f"{c} int" for c in id_cols)
-        + ", " + AUDIO_SEGMENT_SCHEMA_SUFFIX
+    """Fan-out: one row per (clip, segment) — the audio twin of
+    extract_frame_features; undecodable payloads emit zero rows."""
+    return map_records(
+        df, id_cols, payload_col,
+        lambda p: audio_segment_features(p, n_segments) or [],
+        AUDIO_SEGMENT_SCHEMA_SUFFIX,
     )
-
-    def kernel(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows = []
-            for _, row in pdf.iterrows():
-                p = row[payload_col]
-                segs = audio_segment_features(
-                    bytes(p) if p is not None else None, n_segments
-                )
-                if not segs:
-                    continue
-                ids = tuple(row[c] for c in id_cols)
-                rows.extend(ids + s for s in segs)
-            yield pd.DataFrame(
-                rows,
-                columns=list(id_cols) + ["seg_idx", "seg_frames", "rms"],
-            )
-
-    return pruned.mapInPandas(kernel, schema=out_schema)

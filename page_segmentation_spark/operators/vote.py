@@ -27,25 +27,6 @@ from page_segmentation_spark.config import postprocessor_key
 from page_segmentation_spark.operators.islands import with_islands
 
 
-def with_cc_ids(nodes: DataFrame) -> DataFrame:
-    """Component id for fg nodes (null for non-fg) — W6 analog.
-
-    A component is homogeneous in (tag, container): a footer/aside
-    paragraph is NOT the same structural component as an adjacent
-    article paragraph even when the tags match — voting them together
-    lets a big body run flip a furniture node to main (mirror:
-    oracle.cc_majority_vote)."""
-    keys = (
-        ["is_fg", "tag", "container"]
-        if "container" in nodes.columns
-        else ["is_fg", "tag"]
-    )
-    marked = with_islands(nodes, keys, out_col="cc_id")
-    return marked.withColumn(
-        "cc_id", F.when(F.col("is_fg"), F.col("cc_id"))
-    )
-
-
 def cc_majority(nodes: DataFrame) -> DataFrame:
     """A2: overwrite fg nodes with their component's majority class.
 

@@ -20,7 +20,6 @@ _PDF_MAGIC = b"%PDF-"
 def parse_page(
     content: bytes | str,
     max_nodes: int = 50_000,
-    backend: str | None = None,
     pdf_password: str = "",
 ) -> List[Dict[str, Any]]:
     """Parse one page byte-stream (HTML or PDF) into ordered node records
@@ -31,7 +30,7 @@ def parse_page(
     if isinstance(content, (bytes, bytearray)):
         if bytes(content[:5]) == _PDF_MAGIC:
             return parse_pdf(bytes(content), max_nodes=max_nodes, password=pw)
-        return parse_html(content, max_nodes=max_nodes, backend=backend)
+        return parse_html(content, max_nodes=max_nodes)
     if isinstance(content, str) and content.startswith("%PDF-"):
         # a PDF that travelled as text: recover the byte stream
         return parse_pdf(
@@ -39,4 +38,4 @@ def parse_page(
             max_nodes=max_nodes,
             password=pw,
         )
-    return parse_html(content, max_nodes=max_nodes, backend=backend)
+    return parse_html(content, max_nodes=max_nodes)

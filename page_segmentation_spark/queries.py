@@ -24,6 +24,7 @@ from page_segmentation_spark.operators import sampling as SA
 from page_segmentation_spark.operators import similarity as S
 from page_segmentation_spark.operators.islands import with_islands
 from page_segmentation_spark.operators.splits import create_splits, single_split
+from page_segmentation_spark.records import map_records
 
 QueryFn = Callable[[SparkSession, str], DataFrame]
 QUERIES: Dict[str, QueryFn] = {}
@@ -3444,6 +3445,23 @@ def mm_media_stats(spark, sf_dir):
     )
 
 
+def _media_fixture(spark, sf_dir, n_docs, make_payload) -> DataFrame:
+    """(media_idx int, payload binary) for documents with doc_id < n_docs:
+    ``make_payload(doc_id)`` is the encode side of the fixture (datagen);
+    the operator under test is the decode kernel the row runs on it.
+    Ships the package because the external driver builds a plain
+    session and executors must import both sides."""
+    from page_segmentation_spark.packaging import ship_package
+
+    ship_package(spark)
+    docs = _t(spark, sf_dir, "documents").where(F.col("doc_id") < n_docs)
+    ids = docs.select(F.col("doc_id").cast("int").alias("media_idx"), "doc_id")
+    return map_records(
+        ids, ["media_idx"], "doc_id",
+        lambda doc_id: [(make_payload(doc_id),)], "payload binary",
+    )
+
+
 @_q(
     "mm_feature_extract",
     """
@@ -3476,32 +3494,14 @@ def mm_feature_extract(spark, sf_dir):
     payloads (closed-form pixel function, datagen.make_media_payload —
     gray/RGB PNG across all five scanline filter types plus 24-bit BMP)
     are decoded by the stdlib kernel (operators/multimodal.decode_image)
-    inside Arrow mapInPandas; the oracle recomputes width/height/channels/
+    through the per-record kernel; the oracle recomputes width/height/channels/
     px_mean/fg_ratio from the pixel closed form, so a wrong unfilter or
     BGR swap fails the hash.  The analog of the reference's real image
     byte decode in its loader (reference lib/dataset.py:160-191)."""
-    import pandas as pd
-
     from page_segmentation_spark.datagen import make_media_payload
     from page_segmentation_spark.operators import multimodal as MM
-    from page_segmentation_spark.packaging import ship_package
 
-    ship_package(spark)
-    ids = _t(spark, sf_dir, "documents").where(F.col("doc_id") < 60).select(
-        F.col("doc_id").cast("int").alias("media_idx")
-    )
-
-    def synth(batches):
-        # fixture synthesis (encode side); the operator under test is the
-        # decode kernel in extract_features
-        for pdf in batches:
-            out = pdf[["media_idx"]].copy()
-            out["payload"] = [
-                make_media_payload(int(i)) for i in pdf["media_idx"]
-            ]
-            yield out
-
-    media = ids.mapInPandas(synth, schema="media_idx int, payload binary")
+    media = _media_fixture(spark, sf_dir, 60, make_media_payload)
     feats = MM.extract_features(media, id_cols=("media_idx",))
     return feats.select(
         F.col("media_idx").cast("long").alias("doc_id"),
@@ -3553,29 +3553,15 @@ def mm_audio_features(spark, sf_dir):
     payloads (closed-form PCM16 sample function, datagen.build_wav —
     chunk layout includes a leading non-audio chunk so the decoder must
     walk chunks) are decoded by the stdlib kernel
-    (operators/multimodal.decode_wav) inside Arrow mapInPandas; the
+    (operators/multimodal.decode_wav) through the per-record kernel; the
     oracle recomputes sample_rate/channels/n_frames/duration/RMS/
     zero-crossing-rate from the sample closed form, so a wrong chunk
     walk, byte order, or interleave order fails the hash.  All doubles
     are exact-int sums with one division (+ one sqrt) on both sides."""
     from page_segmentation_spark.datagen import build_wav
     from page_segmentation_spark.operators import multimodal as MM
-    from page_segmentation_spark.packaging import ship_package
 
-    ship_package(spark)
-    ids = _t(spark, sf_dir, "documents").where(F.col("doc_id") < 60).select(
-        F.col("doc_id").cast("int").alias("media_idx")
-    )
-
-    def synth(batches):
-        # fixture synthesis (encode side); the operator under test is the
-        # decode kernel in extract_audio_features
-        for pdf in batches:
-            out = pdf[["media_idx"]].copy()
-            out["payload"] = [build_wav(int(i)) for i in pdf["media_idx"]]
-            yield out
-
-    media = ids.mapInPandas(synth, schema="media_idx int, payload binary")
+    media = _media_fixture(spark, sf_dir, 60, build_wav)
     feats = MM.extract_audio_features(media, id_cols=("media_idx",))
     return feats.select(
         F.col("media_idx").cast("long").alias("doc_id"),
@@ -3620,24 +3606,10 @@ def mm_audio_segments(spark, sf_dir):
     RMS is an exact int64 bincount + one division + one sqrt; the
     oracle recomputes per-segment sums from the PCM closed form, so a
     boundary off-by-one fails the hash."""
-    import pandas as pd
-
     from page_segmentation_spark.datagen import build_wav
     from page_segmentation_spark.operators import multimodal as MM
-    from page_segmentation_spark.packaging import ship_package
 
-    ship_package(spark)
-    ids = _t(spark, sf_dir, "documents").where(F.col("doc_id") < 40).select(
-        F.col("doc_id").cast("int").alias("media_idx")
-    )
-
-    def synth(batches):
-        for pdf in batches:
-            out = pdf[["media_idx"]].copy()
-            out["payload"] = [build_wav(int(i)) for i in pdf["media_idx"]]
-            yield out
-
-    media = ids.mapInPandas(synth, schema="media_idx int, payload binary")
+    media = _media_fixture(spark, sf_dir, 40, build_wav)
     segs = MM.extract_audio_segments(
         media, n_segments=4, id_cols=("media_idx",)
     )
@@ -3669,27 +3641,15 @@ def mm_video_meta(spark, sf_dir):
     """REAL video-container metadata under the driver gate:
     deterministic RIFF/AVI payloads (datagen.build_avi — leading JUNK
     chunk, avih inside LIST hdrl) are walked by the stdlib parser
-    (operators/multimodal.parse_avi_meta) inside Arrow mapInPandas; the
+    (operators/multimodal.parse_avi_meta) through the per-record kernel; the
     oracle recomputes width/height/n_frames/fps/duration from the
     closed form, so a wrong chunk walk or field offset fails the hash.
     Frame decode stays documented out of scope (codecs); this row pins
     the container surface that frame_sample_plan consumes."""
     from page_segmentation_spark.datagen import build_avi
     from page_segmentation_spark.operators import multimodal as MM
-    from page_segmentation_spark.packaging import ship_package
 
-    ship_package(spark)
-    ids = _t(spark, sf_dir, "documents").where(F.col("doc_id") < 60).select(
-        F.col("doc_id").cast("int").alias("media_idx")
-    )
-
-    def synth(batches):
-        for pdf in batches:
-            out = pdf[["media_idx"]].copy()
-            out["payload"] = [build_avi(int(i)) for i in pdf["media_idx"]]
-            yield out
-
-    media = ids.mapInPandas(synth, schema="media_idx int, payload binary")
+    media = _media_fixture(spark, sf_dir, 60, build_avi)
     feats = MM.extract_video_meta(media, id_cols=("media_idx",))
     return feats.select(
         F.col("media_idx").cast("long").alias("doc_id"),
@@ -3735,26 +3695,10 @@ def mm_image_resize(spark, sf_dir):
     every RESIZED pixel from the closed form composed with the integer
     floor mapping — a wrong rounding convention or axis swap fails the
     hash."""
-    import pandas as pd
-
     from page_segmentation_spark.datagen import make_media_payload
     from page_segmentation_spark.operators import multimodal as MM
-    from page_segmentation_spark.packaging import ship_package
 
-    ship_package(spark)
-    ids = _t(spark, sf_dir, "documents").where(F.col("doc_id") < 60).select(
-        F.col("doc_id").cast("int").alias("media_idx")
-    )
-
-    def synth(batches):
-        for pdf in batches:
-            out = pdf[["media_idx"]].copy()
-            out["payload"] = [
-                make_media_payload(int(i)) for i in pdf["media_idx"]
-            ]
-            yield out
-
-    media = ids.mapInPandas(synth, schema="media_idx int, payload binary")
+    media = _media_fixture(spark, sf_dir, 60, make_media_payload)
     feats = MM.extract_resized_features(
         media, out_w=6, out_h=6, id_cols=("media_idx",)
     )
@@ -3792,8 +3736,8 @@ def mm_video_frames(spark, sf_dir):
     """REAL uncompressed-AVI frame decode under the driver gate: the
     deterministic 'DIB '/BI_RGB payloads (datagen.build_avi_frames —
     strh/strf stream headers, bottom-up padded BGR rows in 00db movi
-    chunks) are decoded by multimodal.decode_avi_frames inside one
-    Arrow mapInPandas stage that samples every 4th frame and reduces it
+    chunks) are decoded by multimodal.frame_features through the
+    per-record kernel, which samples every 4th frame and reduces it
     to exact int64 channel sums / one division.  The oracle recomputes
     the per-frame means from the pixel closed form (B=3x+f, G=5y+2f,
     R=x+y+f — datagen mirror pair), so a wrong stride, row order
@@ -3802,22 +3746,8 @@ def mm_video_frames(spark, sf_dir):
     gap for the codec-free container corner."""
     from page_segmentation_spark.datagen import build_avi_frames
     from page_segmentation_spark.operators import multimodal as MM
-    from page_segmentation_spark.packaging import ship_package
 
-    ship_package(spark)
-    ids = _t(spark, sf_dir, "documents").where(F.col("doc_id") < 40).select(
-        F.col("doc_id").cast("int").alias("media_idx")
-    )
-
-    def synth(batches):
-        for pdf in batches:
-            out = pdf[["media_idx"]].copy()
-            out["payload"] = [
-                build_avi_frames(int(i)) for i in pdf["media_idx"]
-            ]
-            yield out
-
-    media = ids.mapInPandas(synth, schema="media_idx int, payload binary")
+    media = _media_fixture(spark, sf_dir, 40, build_avi_frames)
     feats = MM.extract_frame_features(
         media, id_cols=("media_idx",), every_n=4
     )
@@ -3859,7 +3789,7 @@ _PRIORITY = [
     # multimodal rows (real kernels under the gate)
     "mm_media_stats", "mm_feature_extract",
     "mm_audio_features", "mm_video_meta", "mm_video_frames",
-    "mm_image_resize", "mm_audio_segments", "mm_audio_segments",
+    "mm_image_resize", "mm_audio_segments",
     # round-5 additions (fresh rows wanted on record)
     "dedup_span_scrub", "crawl_latest_capture", "crawl_cdx_select",
     "sample_token_budget", "text_url_blocklist",
@@ -3884,7 +3814,9 @@ _PRIORITY = [
 
 
 def _reorder_catalog() -> None:
-    ordered = {n: QUERIES[n] for n in _PRIORITY if n in QUERIES}
+    # KeyError on a misspelled name: a silently dropped entry would push
+    # its row out of the recorded window
+    ordered = {n: QUERIES[n] for n in _PRIORITY}
     for n, fn in QUERIES.items():
         ordered.setdefault(n, fn)
     QUERIES.clear()

@@ -10,8 +10,9 @@ annotation-XML column describing labeled node spans per document:
       <region type="ad" spans="10,13"/>
     </annotation>
 
-* XML parse runs in an Arrow-batched pandas UDF over ``mapInPandas``
-  (stdlib xml.etree standing in for lxml) — S5.
+* XML parse is a pure per-document function run through the shared
+  per-record kernel (:func:`page_segmentation_spark.records.map_records`;
+  stdlib xml.etree standing in for lxml) — S5.
 * The 19-type -> {background, text, image} collapse
   (reference lib/pagexml.py:66-129) becomes the REGION_TYPE_CLASS map.
 * ``string_to_points`` (P12, reference lib/pagexml.py:161-167) is pure
@@ -23,13 +24,13 @@ annotation-XML column describing labeled node spans per document:
 from __future__ import annotations
 
 import xml.etree.ElementTree as ET
-from typing import Iterator
+from typing import List, Optional, Tuple
 
-import pandas as pd
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 from page_segmentation_spark.config import CLS_BOILER, CLS_MAIN, CLS_MEDIA
+from page_segmentation_spark.records import map_records
 
 #: region-type collapse — the text_nontext MaskSetting analog
 #: (reference lib/pagexml.py:95-112: 19 PageXML region types -> 3 classes)
@@ -49,43 +50,39 @@ REGION_TYPE_CLASS = {
     "background": CLS_BOILER,
 }
 
-GT_SPAN_SCHEMA = (
-    "url string, region_type string, label int, span_start long, span_end long"
+_GT_SPAN_VALUES = (
+    "region_type string, label int, span_start long, span_end long"
 )
+GT_SPAN_SCHEMA = "url string, " + _GT_SPAN_VALUES
+
+
+def annotation_spans(xml: Optional[str]) -> List[Tuple[str, int, int, int]]:
+    """One annotation document -> [(region_type, label, span_start,
+    span_end)]; empty or malformed annotations give no rows."""
+    if not xml:
+        return []
+    try:
+        root = ET.fromstring(xml)
+    except ET.ParseError:
+        return []  # malformed annotation -> no GT for this url
+    out = []
+    for region in root.iter("region"):
+        rtype = region.get("type", "background")
+        label = REGION_TYPE_CLASS.get(rtype, CLS_BOILER)
+        for span in (region.get("spans") or "").split():
+            try:
+                s, e = span.split(",")
+                s_i, e_i = int(s), int(e)
+            except ValueError:
+                continue
+            out.append((rtype, label, s_i, e_i))
+    return out
 
 
 def parse_annotations(df: DataFrame, xml_col: str = "labels_xml") -> DataFrame:
-    """(url, labels_xml) -> one row per ground-truth span (S5)."""
-    pruned = df.select("url", xml_col)
-
-    def kernel(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            out = {k: [] for k in
-                   ("url", "region_type", "label", "span_start", "span_end")}
-            for url, xml in zip(pdf["url"], pdf[xml_col]):
-                if not xml:
-                    continue
-                try:
-                    root = ET.fromstring(xml)
-                except ET.ParseError:
-                    continue  # malformed annotation -> no GT for this url
-                for region in root.iter("region"):
-                    rtype = region.get("type", "background")
-                    label = REGION_TYPE_CLASS.get(rtype, CLS_BOILER)
-                    for span in (region.get("spans") or "").split():
-                        try:
-                            s, e = span.split(",")
-                            s_i, e_i = int(s), int(e)
-                        except ValueError:
-                            continue
-                        out["url"].append(url)
-                        out["region_type"].append(rtype)
-                        out["label"].append(label)
-                        out["span_start"].append(s_i)
-                        out["span_end"].append(e_i)
-            yield pd.DataFrame(out)
-
-    return pruned.mapInPandas(kernel, schema=GT_SPAN_SCHEMA)
+    """(url, labels_xml) -> one row per ground-truth span (S5),
+    GT_SPAN_SCHEMA."""
+    return map_records(df, ["url"], xml_col, annotation_spans, _GT_SPAN_VALUES)
 
 
 #: PAGE-XML region-element/type collapse (the reference's 19-type map,
@@ -124,11 +121,12 @@ PAGEXML_REGION_CLASS = {
     "UnknownRegion": CLS_BOILER,
 }
 
-PAGEXML_SCHEMA = (
-    "url string, region_idx int, region_id string, region_kind string, "
+_PAGEXML_VALUES = (
+    "region_idx int, region_id string, region_kind string, "
     "region_type string, label int, n_lines long, text string, "
     "points string, line_start long, line_end long"
 )
+PAGEXML_SCHEMA = "url string, " + _PAGEXML_VALUES
 
 
 def _pagexml_ns(root) -> str:
@@ -141,92 +139,72 @@ def _pagexml_ns(root) -> str:
     return ""
 
 
+def pagexml_regions(xml: Optional[str]) -> List[tuple]:
+    """One PAGE-XML document -> one tuple per region in _PAGEXML_VALUES
+    order: the collapsed 3-class label, Coords points string, region
+    text (TextEquiv/Unicode, region-level or line-joined), and the 1-D
+    line span [line_start, line_end] from cumulative TextLine counts in
+    reading order.  Malformed documents give no rows."""
+    if not xml:
+        return []
+    try:
+        root = ET.fromstring(xml)
+    except ET.ParseError:
+        return []
+    ns = _pagexml_ns(root)
+    q = (lambda t: f"{{{ns}}}{t}") if ns else (lambda t: t)
+    if root.tag not in (q("PcGts"), "PcGts"):
+        return []
+    out = []
+    line_cursor = 0
+    for page in root.iter(q("Page")):
+        for region in page:
+            kind = region.tag.rsplit("}", 1)[-1]
+            if kind not in PAGEXML_REGION_CLASS:
+                continue
+            rtype = region.get("type", "") or ""
+            label = PAGEXML_REGION_CLASS[kind]
+            if label is None:  # TextRegion: @type decides
+                label = PAGEXML_TEXT_TYPE_CLASS.get(rtype, CLS_MAIN)
+            coords = region.find(q("Coords"))
+            points = coords.get("points", "") if coords is not None else ""
+            lines = region.findall(q("TextLine"))
+            line_texts = []
+            for ln in lines:
+                te = ln.find(q("TextEquiv"))
+                uni = te.find(q("Unicode")) if te is not None else None
+                if uni is not None and uni.text:
+                    line_texts.append(uni.text)
+            rte = region.find(q("TextEquiv"))
+            runi = rte.find(q("Unicode")) if rte is not None else None
+            text = (
+                runi.text if runi is not None and runi.text
+                else " ".join(line_texts)
+            )
+            n_lines = len(lines)
+            out.append((
+                len(out),
+                region.get("id", ""),
+                kind,
+                rtype,
+                label,
+                n_lines,
+                text,
+                points,
+                line_cursor if n_lines else -1,
+                line_cursor + n_lines - 1 if n_lines else -1,
+            ))
+            line_cursor += n_lines
+    return out
+
+
 def parse_pagexml(df: DataFrame, xml_col: str = "pagexml") -> DataFrame:
-    """S5, real PageXML shape: (url, pagexml) -> one row per region with
-    the collapsed 3-class label, Coords points string, region text
-    (TextEquiv/Unicode, region-level or line-joined), and the 1-D line
-    span [line_start, line_end] from cumulative TextLine counts in
-    reading order — the node-granularity GT this engine rasterizes
-    (each TextLine is one node of a line-based node table).
-
-    Arrow-batched mapInPandas, stdlib ElementTree; malformed documents
-    contribute no rows (never fail a batch)."""
-    pruned = df.select("url", xml_col)
-    cols = ("url", "region_idx", "region_id", "region_kind", "region_type",
-            "label", "n_lines", "text", "points", "line_start", "line_end")
-
-    def kernel(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            out = {k: [] for k in cols}
-            for url, xml in zip(pdf["url"], pdf[xml_col]):
-                if not xml:
-                    continue
-                try:
-                    root = ET.fromstring(xml)
-                except ET.ParseError:
-                    continue
-                ns = _pagexml_ns(root)
-                q = (lambda t: f"{{{ns}}}{t}") if ns else (lambda t: t)
-                if root.tag not in (q("PcGts"), "PcGts"):
-                    continue
-                line_cursor = 0
-                ridx = 0
-                for page in root.iter(q("Page")):
-                    for region in page:
-                        kind = region.tag.rsplit("}", 1)[-1]
-                        if kind not in PAGEXML_REGION_CLASS:
-                            continue
-                        rtype = region.get("type", "") or ""
-                        label = PAGEXML_REGION_CLASS[kind]
-                        if label is None:  # TextRegion: @type decides
-                            label = PAGEXML_TEXT_TYPE_CLASS.get(
-                                rtype, CLS_MAIN
-                            )
-                        coords = region.find(q("Coords"))
-                        points = (
-                            coords.get("points", "") if coords is not None
-                            else ""
-                        )
-                        lines = region.findall(q("TextLine"))
-                        line_texts = []
-                        for ln in lines:
-                            te = ln.find(q("TextEquiv"))
-                            uni = (
-                                te.find(q("Unicode"))
-                                if te is not None else None
-                            )
-                            if uni is not None and uni.text:
-                                line_texts.append(uni.text)
-                        rte = region.find(q("TextEquiv"))
-                        runi = (
-                            rte.find(q("Unicode")) if rte is not None
-                            else None
-                        )
-                        text = (
-                            runi.text if runi is not None and runi.text
-                            else " ".join(line_texts)
-                        )
-                        n_lines = len(lines)
-                        out["url"].append(url)
-                        out["region_idx"].append(ridx)
-                        out["region_id"].append(region.get("id", ""))
-                        out["region_kind"].append(kind)
-                        out["region_type"].append(rtype)
-                        out["label"].append(label)
-                        out["n_lines"].append(n_lines)
-                        out["text"].append(text)
-                        out["points"].append(points)
-                        out["line_start"].append(
-                            line_cursor if n_lines else -1
-                        )
-                        out["line_end"].append(
-                            line_cursor + n_lines - 1 if n_lines else -1
-                        )
-                        line_cursor += n_lines
-                        ridx += 1
-            yield pd.DataFrame(out)
-
-    return pruned.mapInPandas(kernel, schema=PAGEXML_SCHEMA)
+    """S5, real PageXML shape: (url, pagexml) -> one row per region
+    (PAGEXML_SCHEMA, :func:`pagexml_regions`) — the node-granularity GT
+    this engine rasterizes (each TextLine is one node of a line-based
+    node table).  Stdlib ElementTree; malformed documents contribute no
+    rows (never fail a batch)."""
+    return map_records(df, ["url"], xml_col, pagexml_regions, _PAGEXML_VALUES)
 
 
 def pagexml_gt_spans(regions: DataFrame) -> DataFrame:

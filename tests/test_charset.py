@@ -6,6 +6,7 @@ import pytest
 
 from page_segmentation_spark import datagen as dg
 from page_segmentation_spark.html_parse import (
+    _BlockCollector,
     decode_page_bytes,
     parse_html,
     sniff_charset,
@@ -54,10 +55,13 @@ def test_charset_page_extracts_decoded_text(codec):
 
 @pytest.mark.parametrize("codec", sorted(dg.CHARSET_CASES))
 def test_charset_backends_agree(codec):
+    """The tokenizer's node stream equals stdlib html.parser driving the
+    same collector (the reference the tokenizer is checked against)."""
     raw = dg.make_charset_page(codec, 3)["html"]
-    assert parse_html(raw, backend="tokenizer") == parse_html(
-        raw, backend="htmlparser"
-    )
+    reference = _BlockCollector(max_nodes=50_000)
+    reference.feed(decode_page_bytes(raw))
+    reference.close()
+    assert parse_html(raw) == reference.nodes
 
 
 def test_decode_is_deterministic_on_garbage():

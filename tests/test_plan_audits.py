@@ -189,3 +189,12 @@ def test_survey_rows_inside_driver_recorded_window():
     ]
     for name in must_be_recorded:
         assert keys.index(name) < 50, (name, keys.index(name))
+
+
+def test_catalog_priority_names_unique_and_known():
+    """Every _PRIORITY entry names a registered row exactly once: a
+    duplicate or a typo makes the priority window silently shorter."""
+    from page_segmentation_spark.queries import _PRIORITY
+
+    assert len(_PRIORITY) == len(set(_PRIORITY))
+    assert [n for n in _PRIORITY if n not in QUERIES] == []

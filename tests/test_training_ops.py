@@ -605,6 +605,100 @@ def test_extract_frame_features_samples_and_skips(spark):
     assert r["mean_g"] == w * (5 * h * (h - 1) // 2 + 2 * f * h) / (w * h)
 
 
+def _frame_rows(payload, every_n):
+    """Test-side reference for extract_frame_features: exact channel
+    sums of every every_n-th decoded frame, one division each."""
+    import numpy as np
+
+    w, h, frames = MM.decode_avi_frames(payload)
+    rows = []
+    for f in range(0, len(frames), every_n):
+        sums = frames[f].reshape(-1, 3).sum(axis=0, dtype=np.int64)
+        rows.append((f, w, h) + tuple(int(v) / (w * h) for v in sums))
+    return rows
+
+
+def _resize_row(payload, out_w, out_h):
+    """Test-side reference for extract_resized_features."""
+    import numpy as np
+
+    w, h, ch, px = MM.decode_image(payload)
+    small = MM.resize_nearest(px, w, h, ch, out_w, out_h)
+    total = int(small.sum(dtype=np.int64))
+    return (out_w, out_h, ch, total / (out_w * out_h * ch))
+
+
+#: operator -> (run on df, decodable payload, expected value rows for
+#: that payload, fan-out?).  1:1 operators keep undecodable payloads as
+#: one NULL-feature row; fan-out operators drop them.
+_MEDIA_OPS = {
+    "extract_features": (
+        MM.extract_features,
+        lambda dg: dg.make_media_payload(5),
+        lambda p: [MM.image_features(p)],
+        False,
+    ),
+    "extract_audio_features": (
+        MM.extract_audio_features,
+        lambda dg: dg.build_wav(3),
+        lambda p: [MM.audio_features(p)],
+        False,
+    ),
+    "extract_video_meta": (
+        MM.extract_video_meta,
+        lambda dg: dg.build_avi(2),
+        lambda p: [MM.video_meta(p)],
+        False,
+    ),
+    "extract_resized_features": (
+        lambda df: MM.extract_resized_features(df, 5, 3),
+        lambda dg: dg.make_media_payload(4),
+        lambda p: [_resize_row(p, 5, 3)],
+        False,
+    ),
+    "extract_frame_features": (
+        lambda df: MM.extract_frame_features(df, every_n=4),
+        lambda dg: dg.build_avi_frames(0),
+        lambda p: _frame_rows(p, 4),
+        True,
+    ),
+    "extract_audio_segments": (
+        lambda df: MM.extract_audio_segments(df, n_segments=4),
+        lambda dg: dg.build_wav(5),
+        lambda p: MM.audio_segment_features(p, 4),
+        True,
+    ),
+}
+
+
+@pytest.mark.parametrize("op", sorted(_MEDIA_OPS))
+def test_media_operator_spark_rows(spark, op):
+    from page_segmentation_spark import datagen as dg
+
+    run, make_payload, expected, fan_out = _MEDIA_OPS[op]
+    good = make_payload(dg)
+    df = spark.createDataFrame(
+        [
+            ("u", 0, bytearray(good)),
+            ("u", 1, bytearray(b"not media")),
+            ("u", 2, None),
+        ],
+        "url string, media_idx int, payload binary",
+    )
+    out = run(df)
+    assert out.columns[:2] == ["url", "media_idx"]
+    value_cols = out.columns[2:]
+    got = sorted(
+        (r["media_idx"],) + tuple(r[c] for c in value_cols)
+        for r in out.collect()
+    )
+    want = [(0,) + tuple(v) for v in expected(good)]
+    assert len(want) > (1 if fan_out else 0)
+    if not fan_out:
+        want += [(i,) + (None,) * len(value_cols) for i in (1, 2)]
+    assert got == want
+
+
 def test_frame_sample_plan(spark):
     df = spark.createDataFrame([("u", 25)], "url string, n_frames int")
     idx = [r["frame_idx"] for r in

@@ -1,13 +1,15 @@
 """Local replica of the driver's correctness gate: run every queries()
 entry on Spark and its oracle_sql() twin on DuckDB at a given sf dir,
 compare row count, sorted-column schema, and order-insensitive value
-hash.  Usage: python tools/crosscheck.py [sf_dir] [name ...]"""
+hash.  Usage: python tools/crosscheck.py [sf_dir] [name ...]
+A requested name that is not a catalog row is an error (exit 2)."""
 
 from __future__ import annotations
 
+import os
 import sys
 
-sys.path.insert(0, "/root/repo")
+sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 import duckdb  # noqa: E402
 
@@ -85,6 +87,11 @@ def main():
 
     from page_segmentation_spark.queries import ORACLE_SQL, QUERIES
     from page_segmentation_spark.session import get_spark
+
+    unknown = sorted(only - set(QUERIES))
+    if unknown:
+        print(f"unknown rows: {unknown}")
+        sys.exit(2)
 
     spark = get_spark(app="crosscheck", master="local[8]", shuffle_partitions=8)
     spark.sparkContext.setLogLevel("ERROR")

@@ -12,10 +12,12 @@ documents:
     region (XY-cut)    -> contiguous main-content span
     mask output        -> extracted main-content text (byte-exact)
 
-Everything is DataFrame-first: parsing runs in Arrow-batched
-``mapInArrow``; features, scoring, connected components, voting and span
-formation are pure JVM-side column/window/groupBy expressions so the hot
-path never crosses into per-row Python.
+Everything is DataFrame-first: parsing (like every Python per-record
+stage) runs Arrow-batched through the one boundary,
+:func:`page_segmentation_spark.records.map_records`; features, scoring,
+connected components, voting and span formation are pure JVM-side
+column/window/groupBy expressions so the hot path never crosses into
+per-row Python.
 """
 
 __version__ = "0.1.0"

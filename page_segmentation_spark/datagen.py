@@ -18,6 +18,7 @@ from __future__ import annotations
 
 import datetime as dt
 import random
+from operator import itemgetter
 from typing import Dict, Iterator, List, Optional, Tuple
 
 _WORDS_EN = (
@@ -1857,50 +1858,40 @@ def build_avi_frames(doc_id: int) -> bytes:
     return b"RIFF" + (4 + len(body)).to_bytes(4, "little") + b"AVI " + body
 
 
+PAGES_SCHEMA = (
+    "url string, warc_ts timestamp, html binary, text string, lang string"
+)
+_PAGE_FIELDS = itemgetter("url", "warc_ts", "html", "text", "lang")
+
+
+def _generated(spark, n: int, partitions: int, page):
+    """Distributed generation: only doc ids are shipped to executors;
+    ``page(doc_id)`` synthesizes each row there, so the driver never
+    materializes page bytes (scales to any n).  Naive ``warc_ts`` values
+    are UTC (the session time zone)."""
+    from page_segmentation_spark.records import map_records
+
+    ids = spark.range(0, n, 1, partitions)
+    return map_records(
+        ids, [], "id", lambda i: (_PAGE_FIELDS(page(i)),), PAGES_SCHEMA
+    )
+
+
 def mixed_pages_df(spark, n: int, seed: int = 42, partitions: int = 8,
                    pdf_every: int = 4):
     """Mixed HTML + PDF corpus: every ``pdf_every``-th page is a PDF byte
     stream — exercises the format-dispatching parse front-end."""
-    import pandas as pd
 
-    ids = spark.range(0, n, 1, partitions).withColumnRenamed("id", "doc_id")
+    def page(i):
+        pdf = i % pdf_every == 0
+        return make_pdf_page(i, seed) if pdf else make_page(i, seed)
 
-    def build(batches):
-        for pdf in batches:
-            rows = [
-                make_pdf_page(int(i), seed)
-                if int(i) % pdf_every == 0
-                else make_page(int(i), seed)
-                for i in pdf["doc_id"]
-            ]
-            yield pd.DataFrame(
-                rows, columns=["url", "warc_ts", "html", "text", "lang"]
-            )
-
-    return ids.mapInPandas(build, schema=PAGES_SCHEMA)
-
-
-PAGES_SCHEMA = (
-    "url string, warc_ts timestamp, html binary, text string, lang string"
-)
+    return _generated(spark, n, partitions, page)
 
 
 def pages_df(spark, n: int, seed: int = 42, partitions: int = 32):
-    """Distributed generation: only (doc_id) tuples are shuffled to
-    executors; HTML is synthesized inside an Arrow-batched mapInPandas so
-    the driver never materializes page bytes (scales to any n)."""
-    import pandas as pd
-
-    ids = spark.range(0, n, 1, partitions).withColumnRenamed("id", "doc_id")
-
-    def build(batches):
-        for pdf in batches:
-            rows = [make_page(int(i), seed) for i in pdf["doc_id"]]
-            yield pd.DataFrame(
-                rows, columns=["url", "warc_ts", "html", "text", "lang"]
-            )
-
-    return ids.mapInPandas(build, schema=PAGES_SCHEMA)
+    """Synthetic pages table of ``n`` rows (see :func:`_generated`)."""
+    return _generated(spark, n, partitions, lambda i: make_page(i, seed))
 
 
 def write_pages(spark, path: str, n: int, seed: int = 42, partitions: int = 32):

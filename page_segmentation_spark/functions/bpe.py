@@ -8,19 +8,20 @@ FROZEN merge table trained on the synthetic corpus by
 ``tools/train_bpe.py`` (rerun + paste to regenerate — a deliberate act,
 like the trained_v1 architecture weights).
 
-Spark surface: :func:`with_bpe_tokens` runs the encoder in an
-Arrow-batched ``mapInPandas`` kernel with a per-word memo cache — the
-Zipf distribution of real text makes the cache hit rate very high, so
-the per-doc cost is ~O(distinct words).  No SQL oracle exists for the
-iterative merge loop (it is not expressible in one query), so the
-driver row for this operator is rows-only — documented, the judge sees
-which.
+Spark surface: :func:`with_bpe_tokens` runs the encoder per row through
+:func:`page_segmentation_spark.records.map_records`, with a per-word
+memo cache — the Zipf distribution of real text makes the cache hit
+rate very high, so the per-doc cost is ~O(distinct words).  No SQL
+oracle exists for the iterative merge loop (it is not expressible in one
+query), so the catalog row for this operator is rows-only.
 """
 
 from __future__ import annotations
 
 import re
-from typing import Dict, Iterator, List, Tuple
+from typing import Dict, List, Tuple
+
+from page_segmentation_spark.records import map_records
 
 _WORD_RE = re.compile(r"[A-Za-z]+|[0-9]+|[^\sA-Za-z0-9]")
 
@@ -275,33 +276,22 @@ def bpe_encode(text: str) -> List[str]:
     return out
 
 
+def _bpe_row(text):
+    toks = bpe_encode(text or "")
+    return ((len(toks), ",".join(toks[:8])),)
+
+
 def with_bpe_tokens(df, text_col: str = "text", id_cols: tuple = ("doc_id",)):
-    """mapInPandas BPE encoding: adds ``n_bpe_tokens`` (long) and
-    ``bpe_preview`` (first 8 tokens, comma-joined — bounded output) per
-    row.  Arrow-batched; the token list itself is intentionally not
-    materialized as a column at corpus scale (it multiplies the table
-    size ~5x; counts and previews cover the filtering/packing uses)."""
-    import pandas as pd  # noqa: F401 (kernel-side)
-
-    cols = list(id_cols) + [text_col]
-    pruned = df.select(*cols)
-    out_schema = (
-        ", ".join(
-            f"{c} string" if c in ("url",) else f"{c} long" for c in id_cols
-        )
-        + ", n_bpe_tokens long, bpe_preview string"
+    """BPE encoding per row: ``id_cols`` (their types kept) plus
+    ``n_bpe_tokens`` (long) and ``bpe_preview`` (first 8 tokens,
+    comma-joined — bounded output).  The token list itself is
+    intentionally not materialized as a column at corpus scale (it
+    multiplies the table size ~5x; counts and previews cover the
+    filtering/packing uses)."""
+    return map_records(
+        df,
+        list(id_cols),
+        text_col,
+        _bpe_row,
+        "n_bpe_tokens long, bpe_preview string",
     )
-
-    def kernel(batches) -> Iterator["pd.DataFrame"]:
-        for pdf in batches:
-            counts, previews = [], []
-            for t in pdf[text_col]:
-                toks = bpe_encode(t or "")
-                counts.append(len(toks))
-                previews.append(",".join(toks[:8]))
-            res = pdf[list(id_cols)].copy()
-            res["n_bpe_tokens"] = counts
-            res["bpe_preview"] = previews
-            yield res
-
-    return pruned.mapInPandas(kernel, schema=out_schema)

@@ -6,8 +6,8 @@ it turns one raw page byte-stream into the "pixel grid in long form" — an
 ordered list of text-block node records.  The *same* function is called by
 
   * the single-node oracle (:mod:`page_segmentation_spark.oracle`), and
-  * the Spark ``mapInArrow`` parse stage
-    (:mod:`page_segmentation_spark.sources.parse`),
+  * the Spark parse stage (:mod:`page_segmentation_spark.sources.parse`,
+    through :func:`page_segmentation_spark.records.map_records`),
 
 so extracted text is byte-identical by construction.  Events come from
 the regex tokenizer (:mod:`page_segmentation_spark.html_tokenize`); the

@@ -29,6 +29,7 @@ from page_segmentation_spark.functions.hashing import (
     h32,
     h32b,
 )
+from page_segmentation_spark.records import map_records
 
 
 def normalized(text: Column) -> Column:
@@ -513,63 +514,40 @@ _GRAM_MASK = (1 << 64) - 1
 _WHASH_CACHE: dict = {}
 
 
-def _gram_hash_kernel(k: int):
-    """mapInArrow kernel: (id, words array<string>) -> one (id, pos, gh)
-    row per k-gram start position.  gh is a polynomial rolling hash over
-    per-word md5-derived 64-bit hashes: one multiply-add per word builds
-    the prefix array, one multiply-subtract per position extracts the
-    gram hash — O(n) hash work per document instead of the O(n*k) bytes
-    the per-position md5-of-slice form pushed through md5.  Word hashes
-    are memoized per worker (vocabulary repeats heavily)."""
+def _gram_hasher(k: int):
+    """Per-document gram hash: words -> one (pos, gh) row per k-gram
+    start position.  gh is a polynomial rolling hash over per-word
+    md5-derived 64-bit hashes: one multiply-add per word builds the
+    prefix array, one multiply-subtract per position extracts the gram
+    hash — O(n) hash work per document instead of the O(n*k) bytes the
+    per-position md5-of-slice form pushed through md5.  Word hashes are
+    memoized per worker (vocabulary repeats heavily)."""
     b_k = pow(_GRAM_B, k, 1 << 64)
     top = 1 << 63
     wrap = 1 << 64
 
-    def kernel(batches):
+    def gram_hashes(words):
         import hashlib
 
-        import pyarrow as pa
-
+        n = len(words)
+        if n < k:
+            return
         cache = _WHASH_CACHE
-        for batch in batches:
-            id_type = batch.schema.field("id").type
-            ids = batch.column("id").to_pylist()
-            words_col = batch.column("words").to_pylist()
-            out_ids: list = []
-            out_pos: list = []
-            out_gh: list = []
-            for id_, words in zip(ids, words_col):
-                n = len(words)
-                if n < k:
-                    continue
-                prefs = [0] * (n + 1)
-                p_acc = 0
-                for i, w in enumerate(words):
-                    v = cache.get(w)
-                    if v is None:
-                        v = int(
-                            hashlib.md5(w.encode("utf-8")).hexdigest()[:16],
-                            16,
-                        )
-                        if len(cache) < 1_000_000:
-                            cache[w] = v
-                    p_acc = (p_acc * _GRAM_B + v) & _GRAM_MASK
-                    prefs[i + 1] = p_acc
-                for p in range(n - k + 1):
-                    g = (prefs[p + k] - prefs[p] * b_k) & _GRAM_MASK
-                    out_ids.append(id_)
-                    out_pos.append(p)
-                    out_gh.append(g - wrap if g >= top else g)
-            yield pa.RecordBatch.from_arrays(
-                [
-                    pa.array(out_ids, type=id_type),
-                    pa.array(out_pos, type=pa.int64()),
-                    pa.array(out_gh, type=pa.int64()),
-                ],
-                names=["id", "pos", "gh"],
-            )
+        prefs = [0] * (n + 1)
+        p_acc = 0
+        for i, w in enumerate(words):
+            v = cache.get(w)
+            if v is None:
+                v = int(hashlib.md5(w.encode("utf-8")).hexdigest()[:16], 16)
+                if len(cache) < 1_000_000:
+                    cache[w] = v
+            p_acc = (p_acc * _GRAM_B + v) & _GRAM_MASK
+            prefs[i + 1] = p_acc
+        for p in range(n - k + 1):
+            g = (prefs[p + k] - prefs[p] * b_k) & _GRAM_MASK
+            yield p, g - wrap if g >= top else g
 
-    return kernel
+    return gram_hashes
 
 
 def duplicate_span_scrub(
@@ -589,7 +567,7 @@ def duplicate_span_scrub(
 
     Plan shape (all linear, no quadratic step):
       1. per doc, the k-gram STARTING at each word position is hashed
-         by the rolling-hash Arrow kernel (:func:`_gram_hash_kernel`):
+         by the rolling-hash Arrow kernel (:func:`_gram_hasher`):
          O(n) multiply-adds per document over memoized per-word
          64-bit hashes, replacing the r5 form that md5-hashed a fresh
          k-word slice join per position (O(n·k) bytes hashed — the
@@ -620,11 +598,9 @@ def duplicate_span_scrub(
     base = df.select(
         F.col(id_col).alias("id"), words_arr.alias("words")
     ).withColumn("n_words", F.size("words"))
-    id_type = base.schema["id"].dataType.simpleString()
     grams = (
-        base.select("id", "words")
-        .mapInArrow(
-            _gram_hash_kernel(k), f"id {id_type}, pos long, gh long"
+        map_records(
+            base, ["id"], "words", _gram_hasher(k), "pos long, gh long"
         )
         # gh is never null; materializing the not-null filter INSIDE the
         # shared subtree keeps the keeper-aggregate side and the

@@ -5,9 +5,9 @@ PDF twin of :mod:`page_segmentation_spark.html_parse` — the second decode
 front-end feeding the same node contract (the reference analogously
 decodes multiple image formats through one loader,
 ``DatasetLoader.load_images``, reference lib/dataset.py:160-191).  The
-SAME function is called by the single-node oracle and the Spark
-``mapInArrow`` parse stage (via :mod:`page_segmentation_spark.page_parse`),
-so extracted text is byte-identical by construction.
+SAME function is called by the single-node oracle and the Spark parse
+stage (via :mod:`page_segmentation_spark.page_parse`), so extracted text
+is byte-identical by construction.
 
 Scope (documented, honest): minimal text extraction for text-op PDFs —
 

@@ -11,10 +11,11 @@ Protocol (idempotent):
   * each bucket runs the supplied job and writes
     ``{output}/bucket=<k>/`` atomically (parquet overwrite of that dir);
   * a ``_progress/bucket=<k>.json`` manifest records lineage (bucket,
-    row counts, settings fingerprint, app id) and per-bucket metrics;
+    bucket count, row counts, settings fingerprint, app id) and
+    per-bucket metrics;
   * re-running skips buckets whose manifest exists and whose settings
     fingerprint matches — kill it anywhere and re-run for an identical
-    final table.
+    final table.  A re-run with another bucket count raises instead.
 """
 
 from __future__ import annotations
@@ -71,18 +72,31 @@ def _manifest_path(output_dir: str, k: int) -> str:
 
 
 def committed_buckets(output_dir: str, fingerprint: str, n_buckets: int) -> List[int]:
+    """Buckets whose manifest matches ``fingerprint``.  Raises
+    ``ValueError`` when any manifest under ``_progress/`` was written
+    with another bucket count: recomputing cannot repair that, because
+    ``read_result`` would still read the stale ``bucket=<k>`` directories
+    (their urls re-bucket elsewhere, so rows would duplicate)."""
+    progress = os.path.join(output_dir, "_progress")
+    names = os.listdir(progress) if os.path.isdir(progress) else []
     done = []
-    for k in range(n_buckets):
-        p = _manifest_path(output_dir, k)
-        if os.path.exists(p):
-            try:
-                with open(p) as f:
-                    m = json.load(f)
-                if m.get("fingerprint") == fingerprint:
-                    done.append(k)
-            except (json.JSONDecodeError, OSError):
-                pass  # partial/corrupt manifest -> recompute bucket
-    return done
+    for name in sorted(names):
+        if not (name.startswith("bucket=") and name.endswith(".json")):
+            continue
+        try:
+            with open(os.path.join(progress, name)) as f:
+                m = json.load(f)
+        except (json.JSONDecodeError, OSError):
+            continue  # partial/corrupt manifest -> recompute bucket
+        if m.get("n_buckets") != n_buckets:
+            raise ValueError(
+                f"{output_dir} was checkpointed with n_buckets="
+                f"{m.get('n_buckets')}, not {n_buckets}; write to a new "
+                "output directory"
+            )
+        if m.get("fingerprint") == fingerprint:
+            done.append(int(name[len("bucket="):-len(".json")]))
+    return sorted(done)
 
 
 def run_checkpointed(
@@ -120,6 +134,7 @@ def run_checkpointed(
         )
         manifest = {
             "bucket": k,
+            "n_buckets": n_buckets,
             "fingerprint": fingerprint,
             "rows": n,
             "rows_extracted": n_extracted,

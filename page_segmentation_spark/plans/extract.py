@@ -1,7 +1,7 @@
 """The flagship extraction plan — the reference's predict lifecycle
 (SURVEY.md §3.1) as one lazy DataFrame chain:
 
-    read pages -> mapInArrow(parse) -> featurize -> score
+    read pages -> map_records(parse) -> featurize -> score
       -> post_process chain (cc vote, ...) -> spans -> ordered concat
       -> (url, extracted_text, spans, n_nodes)
 

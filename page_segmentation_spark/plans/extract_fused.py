@@ -12,12 +12,13 @@ parse stage scales linearly (1.06).
 
 This plan deletes the Exchange entirely: every per-document operator
 (parse -> features -> scorer fold -> CC majority vote -> span cut ->
-ordered concat) is data-parallel at the DOCUMENT grain, so one
-``mapInArrow`` stage runs the whole chain per page via the SHARED
-single-document implementation (:func:`oracle.extract_document` — the
-same ``page_parse`` / ``scorer_core`` / span semantics the declarative
-plan mirrors; byte-identity between the two plans is pinned by tests
-and the ``extract_fused_flagship`` driver row).
+ordered concat) is data-parallel at the DOCUMENT grain, so one Arrow
+stage (:func:`page_segmentation_spark.records.map_records`) runs the
+whole chain per page via the SHARED single-document implementation
+(:func:`oracle.extract_document` — the same ``page_parse`` /
+``scorer_core`` / span semantics the declarative plan mirrors;
+byte-identity between the two plans is pinned by tests and the
+``extract_fused_flagship`` catalog row).
 
 The corpus funnel (plans/training_corpus.py) always extracts through
 this plan.  Trade-offs (why the declarative plan stays for node-level
@@ -43,20 +44,12 @@ instead of a driver loop.
 
 from __future__ import annotations
 
-from typing import Callable, Iterator
+from typing import Callable
 
-import pyarrow as pa
 from pyspark.sql import DataFrame
 
 from page_segmentation_spark.config import ExtractSettings, postprocessor_key
-
-_SPAN_T = pa.struct(
-    [
-        pa.field("start", pa.int64()),
-        pa.field("end", pa.int64()),
-        pa.field("n_main", pa.int64()),
-    ]
-)
+from page_segmentation_spark.records import map_records
 
 
 def _fused(
@@ -65,10 +58,12 @@ def _fused(
     extract_one: Callable,
     text_field: str,
 ) -> DataFrame:
-    """One mapInArrow stage running ``extract_one`` (an oracle
-    single-document chain) per page -> (url, text_field, spans,
-    n_nodes).  Every registry name the kernel looks up is resolved
-    here, so a bad setting raises on the driver, not in an executor."""
+    """``extract_one`` (an oracle single-document chain) per page ->
+    (url, text_field, spans, n_nodes), field-for-field identical to the
+    declarative plan's output
+    (test_extract_fused.test_schema_names_and_types_identical).  Every
+    registry name the chain looks up is resolved here, so a bad setting
+    raises on the driver, not in an executor."""
     from page_segmentation_spark.functions.architectures import (
         find_architecture,
     )
@@ -83,53 +78,20 @@ def _fused(
     find_architecture(settings.architecture)
     for name in settings.post_process:
         postprocessor_key(name)
-    # field-for-field identical to the declarative plan's output
-    # (test_extract_fused.test_schema_names_and_types_identical)
-    arrow_schema = pa.schema(
-        [
-            pa.field("url", pa.string()),
-            pa.field(text_field, pa.string()),
-            pa.field("spans", pa.list_(_SPAN_T)),
-            pa.field("n_nodes", pa.int64()),
-        ]
-    )
-    ddl = (
-        f"url string, {text_field} string, "
+
+    def extract(html):
+        r = extract_one(html or b"", settings)
+        return ((r[text_field], r["spans"], r["n_nodes"]),)
+
+    return map_records(
+        pages,
+        ["url"],
+        "html",
+        extract,
+        f"{text_field} string, "
         "spans array<struct<start:bigint,end:bigint,n_main:bigint>>, "
-        "n_nodes bigint"
+        "n_nodes bigint",
     )
-    pruned = pages.select("url", "html")
-
-    def kernel(
-        batches: Iterator[pa.RecordBatch],
-    ) -> Iterator[pa.RecordBatch]:
-        # extract_one pickles by reference: executors import it from
-        # the shipped package zip
-        for batch in batches:
-            d = batch.to_pydict()
-            urls, texts, spans_col, n_nodes = [], [], [], []
-            for url, html in zip(d["url"], d["html"]):
-                r = extract_one(html or b"", settings)
-                urls.append(url)
-                texts.append(r[text_field])
-                spans_col.append(
-                    [
-                        {"start": s, "end": e, "n_main": c}
-                        for (s, e, c) in r["spans"]
-                    ]
-                )
-                n_nodes.append(r["n_nodes"])
-            yield pa.RecordBatch.from_arrays(
-                [
-                    pa.array(urls, type=pa.string()),
-                    pa.array(texts, type=pa.string()),
-                    pa.array(spans_col, type=pa.list_(_SPAN_T)),
-                    pa.array(n_nodes, type=pa.int64()),
-                ],
-                schema=arrow_schema,
-            )
-
-    return pruned.mapInArrow(kernel, schema=ddl)
 
 
 def extract_fused(
@@ -151,7 +113,7 @@ def extract_markdown_fused(
     pages: DataFrame, settings: ExtractSettings | None = None
 ) -> DataFrame:
     """Zero-shuffle markdown extraction — the fused twin of
-    plans/extract.extract_markdown: one mapInArrow stage calling
+    plans/extract.extract_markdown: one Arrow stage calling
     oracle.extract_document_markdown per page (which reuses the plain
     extraction's selected nodes and the shared MD_PREFIXES map), so
     crawl-scale jobs get structured output at fused-plan throughput.

@@ -10,7 +10,7 @@ crawl pages of the input-hint shape (url, warc_ts, html, text, lang):
       -> exact dedup (keep min-url per fingerprint)
 
 Scale shape at 10^12 documents: extraction is the zero-shuffle fused
-plan (plans/extract_fused — one mapInArrow stage, byte-identical to the
+plan (plans/extract_fused — one Arrow stage, byte-identical to the
 declarative plan per url); C4, Gopher, language ID, token counting, and
 fingerprinting are all zero-shuffle Catalyst projections fused into the
 same stage; the ONLY shuffle in the whole corpus build is the dedup
@@ -51,7 +51,7 @@ def corpus_features(
     adds the fingerprint-window dedup) and the streaming plan
     (``streaming.corpus_stream.stream_training_corpus`` adds stateful
     cross-batch first-seen dedup); every stage here is stream-safe (one
-    mapInArrow + projections, zero shuffle)."""
+    Arrow stage + projections, zero shuffle)."""
     return _funnel_from_extracted(extract_fused(pages), c4_opts, gopher_opts)
 
 

@@ -2360,20 +2360,22 @@ def pipeline_training_corpus(spark, sf_dir):
 )
 def pipeline_wet_corpus(spark, sf_dir):
     """The corpus funnel over WET input (Common Crawl's published
-    extracted-text format): the kernel serializes each batch into real
-    WET bytes (sources/warc.build_wet — WARC conversion records,
-    per-record gzip members) and parses them back with the SAME
-    record parser read_wet uses, then corpus_features_from_text runs
-    the identical C4/Gopher/langid/fingerprint/dedup chain with the
-    extract stage skipped.  The oracle is VERBATIM the
+    extracted-text format): each document is serialized into real WET
+    bytes (sources/warc.build_wet — a WARC conversion record in its own
+    gzip member) and parsed back with the SAME record parser read_wet
+    uses, then corpus_features_from_text runs the identical
+    C4/Gopher/langid/fingerprint/dedup chain with the extract stage
+    skipped.  The oracle is VERBATIM the
     pipeline_training_corpus oracle — WET-built and HTML-built corpora
     must agree exactly when the extracted text agrees, and the round
     trip pins the WET serializer/parser pair under the driver gate."""
-    import pandas as pd
-
     from page_segmentation_spark.packaging import ship_package
     from page_segmentation_spark.plans.training_corpus import (
         build_training_corpus,
+    )
+    from page_segmentation_spark.sources.warc import (
+        build_wet,
+        parse_warc_bytes,
     )
 
     ship_package(spark)
@@ -2382,34 +2384,23 @@ def pipeline_wet_corpus(spark, sf_dir):
     j = (
         d.select("doc_id")
         .join(F.broadcast(b), F.col("doc_id") % _PIPE_MOD == F.col("bid"))
-        .select("doc_id", "btext")
+        .select(F.struct("doc_id", "btext").alias("doc"))
     )
 
-    def kernel(batches):
-        from page_segmentation_spark.sources.warc import (
-            build_wet,
-            parse_warc_bytes,
-        )
+    def wet_round_trip(doc):
+        i, t = doc["doc_id"], doc["btext"]
+        rec = {
+            "url": f"https://testdata/doc/{i}",
+            "ts": "2024-01-01T00:00:00Z",
+            "text": f"Document {i}\n\n{t} {PAD}\n\n{t[::-1]} {PAD}",
+        }
+        return [
+            (r["url"], r["html"].decode("utf-8"))
+            for r in parse_warc_bytes(build_wet([rec]))
+            if r["rec_type"] == "conversion"
+        ]
 
-        for pdf in batches:
-            recs = [
-                {
-                    "url": f"https://testdata/doc/{int(i)}",
-                    "ts": "2024-01-01T00:00:00Z",
-                    "text": (
-                        f"Document {int(i)}\n\n{t} {PAD}\n\n{t[::-1]} {PAD}"
-                    ),
-                }
-                for i, t in zip(pdf["doc_id"], pdf["btext"])
-            ]
-            rows = [
-                (r["url"], r["html"].decode("utf-8"))
-                for r in parse_warc_bytes(build_wet(recs))
-                if r["rec_type"] == "conversion"
-            ]
-            yield pd.DataFrame(rows, columns=["url", "text"])
-
-    docs = j.mapInPandas(kernel, schema="url string, text string")
+    docs = map_records(j, [], "doc", wet_round_trip, "url string, text string")
     return build_training_corpus(
         docs,
         c4_opts=dict(banned_words=("customer",), min_kept_lines=2),
@@ -2488,7 +2479,7 @@ def dedup_span_scrub(spark, sf_dir):
     import page_segmentation_spark.operators.dedup as D_
     from page_segmentation_spark.packaging import ship_package
 
-    ship_package(spark)  # gram kernel is mapInArrow — executors need the pkg
+    ship_package(spark)  # the gram kernel runs in Python executors
     # widen the single-split documents scan before the Python kernel
     # (fixture-level, like pages_from_documents — the operator itself
     # adds no input shuffle for real multi-split crawls)
@@ -2881,31 +2872,25 @@ def extract_pdf_encrypted(spark, sf_dir):
     implementations of key derivation + RC4/AES agree, and the
     extracted text still matches the PLAINTEXT closed-form oracle
     (identical to extract_pdf_flagship's)."""
+    import re
+
+    from page_segmentation_spark.datagen import encrypt_pdf
     from page_segmentation_spark.packaging import ship_package
     from page_segmentation_spark.plans.extract import extract
 
     ship_package(spark)
     pages = pdf_pages_from_documents(spark, sf_dir)
+    handlers = ((2, 3), (4, 4), (5, 5))
+    doc_re = re.compile(rb"\(Document (\d+)\)")
 
-    def encrypt_kernel(batches):
-        import re as _re
+    def encrypt(html):
+        m = doc_re.search(html)
+        v, r = handlers[int(m.group(1)) % 3 if m else 0]
+        return ((encrypt_pdf(html, v=v, r=r),),)
 
-        from page_segmentation_spark.datagen import encrypt_pdf
-
-        handlers = ((2, 3), (4, 4), (5, 5))
-        doc_re = _re.compile(rb"\(Document (\d+)\)")
-
-        def enc(html):
-            m = doc_re.search(html)
-            v, r = handlers[int(m.group(1)) % 3 if m else 0]
-            return encrypt_pdf(html, v=v, r=r)
-
-        for b in batches:
-            b["html"] = b["html"].map(enc)
-            yield b
-
-    enc_pages = pages.mapInPandas(encrypt_kernel, schema=pages.schema)
-    out = extract(enc_pages)
+    keys = [c for c in pages.columns if c != "html"]
+    enc_pages = map_records(pages, keys, "html", encrypt, "html binary")
+    out = extract(enc_pages.select(*pages.columns))
     return out.select(
         "url",
         "extracted_text",
@@ -2939,49 +2924,41 @@ def extract_pdf_fonts(spark, sf_dir):
     closed-form oracle as extract_pdf_flagship — a wrong naming-table
     walk, encoding composition, or code width fails the hash on a third
     of the corpus."""
-    import pandas as pd
-
+    from page_segmentation_spark.datagen import (
+        build_cff_pdf,
+        build_cidcmap_pdf,
+        build_ttf_pdf,
+    )
     from page_segmentation_spark.packaging import ship_package
     from page_segmentation_spark.plans.extract import extract
 
     ship_package(spark)
-    d = _t(spark, sf_dir, "documents").select("doc_id", "text", "lang")
+    d = _t(spark, sf_dir, "documents").select(
+        F.struct("doc_id", "text", "lang").alias("doc")
+    )
+    builders = (build_cff_pdf, build_cidcmap_pdf, build_ttf_pdf)
+    footer = "Visit http://example.test/terms or www.example.test/privacy"
 
-    def kernel(batches):
-        from page_segmentation_spark.datagen import (
-            build_cff_pdf,
-            build_cidcmap_pdf,
-            build_ttf_pdf,
+    def pdf_page(doc):
+        i, text = doc["doc_id"], doc["text"]
+        blocks = [
+            (24.0, f"Document {i}"),
+            (11.0, f"{text} {PAD} {PAD}"),
+            (11.0, f"{text[::-1]} {PAD} {PAD}"),
+            (8.0, footer),
+        ]
+        return (
+            (
+                f"https://testdata/doc/{i}.pdf",
+                builders[i % 3](blocks),
+                text,
+                doc["lang"],
+            ),
         )
 
-        builders = (build_cff_pdf, build_cidcmap_pdf, build_ttf_pdf)
-        footer = (
-            "Visit http://example.test/terms or www.example.test/privacy"
-        )
-        for b in batches:
-            rows = []
-            for i, text, lang in zip(b["doc_id"], b["text"], b["lang"]):
-                i = int(i)
-                blocks = [
-                    (24.0, f"Document {i}"),
-                    (11.0, f"{text} {PAD} {PAD}"),
-                    (11.0, f"{text[::-1]} {PAD} {PAD}"),
-                    (8.0, footer),
-                ]
-                rows.append(
-                    (
-                        f"https://testdata/doc/{i}.pdf",
-                        builders[i % 3](blocks),
-                        text,
-                        lang,
-                    )
-                )
-            yield pd.DataFrame(
-                rows, columns=["url", "html", "text", "lang"]
-            )
-
-    pages = d.mapInPandas(
-        kernel, schema="url string, html binary, text string, lang string"
+    pages = map_records(
+        d, [], "doc", pdf_page,
+        "url string, html binary, text string, lang string",
     ).withColumn(
         "warc_ts", F.to_timestamp(F.lit("2024-01-01 00:00:00"))
     )

@@ -1,74 +1,38 @@
 """Spark parse stage: pages -> exploded DOM-node table.
 
 The analog of ``DatasetLoader.load_images`` + ``prepare_images``
-(reference lib/dataset.py:131-198): Arrow-batched ``mapInArrow`` over the
-pages table, calling the *shared* pure-Python parser
-(:func:`page_segmentation_spark.html_parse.parse_html`) so Spark output
-and oracle output agree byte-for-byte.  The reference's
+(reference lib/dataset.py:131-198): the *shared* pure-Python parser
+(:func:`page_segmentation_spark.page_parse.parse_page`) run per page
+through :func:`page_segmentation_spark.records.map_records`, so Spark
+output and oracle output agree byte-for-byte.  The reference's
 ``multiprocessing.Pool(12, maxtasksperchild=100)`` (lib/dataset.py:195)
 becomes Spark task parallelism; the worker-recycling analog is the Arrow
 batch size (``spark.sql.execution.arrow.maxRecordsPerBatch``).
-
-``mapInArrow`` (not ``mapInPandas``): the kernel builds pyarrow
-RecordBatches directly from columnar Python lists, skipping the pandas
-construction/conversion on both sides of the worker (~10% on the parse
-stage).
 """
 
 from __future__ import annotations
 
-from typing import Iterator
+from operator import itemgetter
 
-import pyarrow as pa
 from pyspark.sql import DataFrame
 
 from page_segmentation_spark.config import MAX_NODES_PER_DOC
 from page_segmentation_spark.html_parse import NODE_FIELDS
 from page_segmentation_spark.page_parse import parse_page
+from page_segmentation_spark.records import map_records
 
-NODE_SCHEMA = (
-    "url string, node_idx long, tag string, container string, depth int, "
+_NODE_DDL = (
+    "node_idx long, tag string, container string, depth int, "
     "text string, "
     "is_fg boolean, n_chars long, n_tokens long, n_link_chars long, "
     "n_punct long, n_digits long, n_upper long, n_alpha long, n_stop long"
 )
-ARROW_SCHEMA = pa.schema(
-    [
-        ("url", pa.string()),
-        ("node_idx", pa.int64()),
-        ("tag", pa.string()),
-        ("container", pa.string()),
-        ("depth", pa.int32()),
-        ("text", pa.string()),
-        ("is_fg", pa.bool_()),
-        ("n_chars", pa.int64()),
-        ("n_tokens", pa.int64()),
-        ("n_link_chars", pa.int64()),
-        ("n_punct", pa.int64()),
-        ("n_digits", pa.int64()),
-        ("n_upper", pa.int64()),
-        ("n_alpha", pa.int64()),
-        ("n_stop", pa.int64()),
-    ]
-)
-_COLS = ["url"] + NODE_FIELDS
+NODE_SCHEMA = "url string, " + _NODE_DDL
 
-_SENTINEL = {
-    "node_idx": -1,
-    "tag": "",
-    "container": "",
-    "depth": 0,
-    "text": "",
-    "is_fg": False,
-    "n_chars": 0,
-    "n_tokens": 0,
-    "n_link_chars": 0,
-    "n_punct": 0,
-    "n_digits": 0,
-    "n_upper": 0,
-    "n_alpha": 0,
-    "n_stop": 0,
-}
+#: the row of a page with no nodes: zero-node documents survive the
+#: groupBy without a (broadcast-unfriendly) re-join of 10^12 urls;
+#: filtered from n_nodes by node_idx >= 0
+_SENTINEL = (-1, "", "", 0, "", False, 0, 0, 0, 0, 0, 0, 0, 0)
 
 
 def parse_pages(
@@ -79,31 +43,10 @@ def parse_pages(
     """(url, html, ...) -> node table.  Column-pruned input: only url+html
     cross the Arrow channel (Catalyst prunes the parquet scan to these two
     columns — check ReadSchema in explain)."""
-    pruned = pages.select("url", "html")
+    row = itemgetter(*NODE_FIELDS)
 
-    def parse_batches(
-        batches: Iterator[pa.RecordBatch],
-    ) -> Iterator[pa.RecordBatch]:
-        for batch in batches:
-            urls = batch.column("url").to_pylist()
-            htmls = batch.column("html").to_pylist()
-            cols: dict = {c: [] for c in _COLS}
-            url_out = cols["url"]
-            # bound appenders once: ~14 dict lookups saved per node
-            appenders = [(k, cols[k].append) for k in NODE_FIELDS]
-            for url, html in zip(urls, htmls):
-                recs = parse_page(
-                    html, max_nodes=max_nodes, pdf_password=pdf_password
-                )
-                if not recs:
-                    # sentinel row so zero-node documents survive the
-                    # groupBy without a (broadcast-unfriendly) re-join of
-                    # 10^12 urls; filtered from n_nodes by node_idx >= 0
-                    recs = [_SENTINEL]
-                for rec in recs:
-                    url_out.append(url)
-                    for k, ap in appenders:
-                        ap(rec[k])
-            yield pa.RecordBatch.from_pydict(cols, schema=ARROW_SCHEMA)
+    def nodes(html):
+        recs = parse_page(html, max_nodes=max_nodes, pdf_password=pdf_password)
+        return map(row, recs) if recs else (_SENTINEL,)
 
-    return pruned.mapInArrow(parse_batches, schema=NODE_SCHEMA)
+    return map_records(pages, ["url"], "html", nodes, _NODE_DDL)

@@ -11,12 +11,12 @@ This module turns WARC files into the engine's pages shape
 (``url, warc_ts, html, ...`` — see :mod:`..sources.pages_schema`):
 
   * :func:`read_warc` — ``spark.read.format("binaryFile")`` over a path
-    glob, then Arrow-batched ``mapInArrow`` calling the pure-Python
-    record parser.  One task per WARC file: that is the standard
-    Common-Crawl processing grain (a crawl is ~90k files of ~1 GB, so
-    file-level parallelism saturates any cluster; gzip members are not
-    splittable without an external index, and ``binaryFile`` cannot
-    split mid-file anyway).
+    glob, then the pure-Python record parser per file through
+    :func:`page_segmentation_spark.records.map_records`.  One task per
+    WARC file: that is the standard Common-Crawl processing grain (a
+    crawl is ~90k files of ~1 GB, so file-level parallelism saturates
+    any cluster; gzip members are not splittable without an external
+    index, and ``binaryFile`` cannot split mid-file anyway).
   * :func:`parse_warc_bytes` — the shared pure parser (also used by
     tests and usable from a plain Python oracle).
   * :func:`build_warc` — deterministic WARC writer (per-record gzip
@@ -43,8 +43,10 @@ import io
 import zlib
 from typing import Iterator
 
-import pyarrow as pa
 from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import functions as F
+
+from page_segmentation_spark.records import map_records
 
 #: WARC record types we materialize as rows (warcinfo/request/metadata
 #: records are crawl bookkeeping, not page content).
@@ -54,17 +56,6 @@ WARC_SCHEMA = (
     "url string, warc_ts timestamp, html binary, rec_type string, "
     "http_status int, warc_file string"
 )
-_ARROW_SCHEMA = pa.schema(
-    [
-        ("url", pa.string()),
-        ("warc_ts", pa.timestamp("us")),
-        ("html", pa.binary()),
-        ("rec_type", pa.string()),
-        ("http_status", pa.int32()),
-        ("warc_file", pa.string()),
-    ]
-)
-
 
 def _gunzip_members(data: bytes) -> bytes:
     """Decompress a concatenation of gzip members (the Common-Crawl WARC
@@ -199,59 +190,22 @@ BINARY_FILE_DDL = (
 )
 
 
-#: flush the output RecordBatch when accumulated body bytes reach this
-#: (pa.binary() carries 32-bit offsets, hard cap 2 GiB per array; a
-#: ~1 GB crawl .warc.gz inflates past that, so ONE batch per input file
-#: would raise ArrowCapacityError — bounded flushing keeps worker memory
-#: and every output array far below the cap).
-FLUSH_BYTES = 256 * 1024 * 1024
-FLUSH_RECORDS = 65_536
-
-
-def _bounded_batches(recs: Iterator[dict]) -> Iterator[pa.RecordBatch]:
-    """Accumulate parsed records into Arrow RecordBatches, flushing on
-    the FLUSH_BYTES / FLUSH_RECORDS bounds; always emits at least one
-    (possibly empty) batch so the schema is established."""
-    cols: dict[str, list] = {f.name: [] for f in _ARROW_SCHEMA}
-    acc_bytes = 0
-
-    def _flush() -> pa.RecordBatch:
-        nonlocal acc_bytes
-        out = pa.RecordBatch.from_arrays(
-            [pa.array(cols[f.name], type=f.type) for f in _ARROW_SCHEMA],
-            schema=_ARROW_SCHEMA,
+def _content_rows(data: bytes, warc_file: str) -> Iterator[tuple]:
+    """WARC_SCHEMA rows of one WARC byte string (timestamps as epoch
+    microseconds)."""
+    for r in parse_warc_bytes(data, warc_file=warc_file):
+        yield (
+            r["url"],
+            _warc_ts_to_us(r["warc_ts"]),
+            r["html"],
+            r["rec_type"],
+            r["http_status"],
+            r["warc_file"],
         )
-        for v in cols.values():
-            v.clear()
-        acc_bytes = 0
-        return out
-
-    emitted = False
-    for rec in recs:
-        cols["url"].append(rec["url"])
-        cols["warc_ts"].append(_warc_ts_to_us(rec["warc_ts"]))
-        cols["html"].append(rec["html"])
-        cols["rec_type"].append(rec["rec_type"])
-        cols["http_status"].append(rec["http_status"])
-        cols["warc_file"].append(rec["warc_file"])
-        acc_bytes += len(rec["html"] or b"")
-        if acc_bytes >= FLUSH_BYTES or len(cols["url"]) >= FLUSH_RECORDS:
-            emitted = True
-            yield _flush()
-    if cols["url"] or not emitted:
-        yield _flush()
 
 
-def _record_batch_kernel(
-    batches: Iterator[pa.RecordBatch],
-) -> Iterator[pa.RecordBatch]:
-    def recs() -> Iterator[dict]:
-        for batch in batches:
-            d = batch.to_pydict()
-            for fpath, content in zip(d["path"], d["content"]):
-                yield from parse_warc_bytes(content, warc_file=fpath)
-
-    yield from _bounded_batches(recs())
+def _file_rows(file: dict) -> Iterator[tuple]:
+    return _content_rows(file["content"], file["path"])
 
 
 def warc_records(files: DataFrame) -> DataFrame:
@@ -259,14 +213,19 @@ def warc_records(files: DataFrame) -> DataFrame:
     (``path``, ``content`` columns; batch or streaming) -> content
     records ``(url, warc_ts, html, rec_type, http_status, warc_file)``.
 
-    Plan shape: scan -> ArrowEvalPython (the parse kernel) —
-    embarrassingly parallel, no shuffle.  Output RecordBatches are
-    flushed every FLUSH_BYTES body bytes / FLUSH_RECORDS records so no
-    Arrow binary array ever approaches the 2 GiB 32-bit-offset cap,
-    whatever one input file inflates to.
+    Plan shape: scan -> one Arrow stage (the per-file parser through
+    :func:`page_segmentation_spark.records.map_records`) — embarrassingly
+    parallel, no shuffle.  ``map_records`` flushes bounded RecordBatches
+    in the middle of one file's records, so no Arrow binary array ever
+    approaches the 2 GiB 32-bit-offset cap, whatever one input file
+    inflates to.
     """
-    return files.select("path", "content").mapInArrow(
-        _record_batch_kernel, WARC_SCHEMA
+    return map_records(
+        files.select(F.struct("path", "content").alias("file")),
+        [],
+        "file",
+        _file_rows,
+        WARC_SCHEMA,
     )
 
 
@@ -327,22 +286,15 @@ def shard_ranges(
     return shards
 
 
-def _ranged_kernel(
-    batches: Iterator[pa.RecordBatch],
-) -> Iterator[pa.RecordBatch]:
-    def recs() -> Iterator[dict]:
-        for batch in batches:
-            d = batch.to_pydict()
-            for path, off, ln in zip(d["path"], d["offset"], d["length"]):
-                local = path[7:] if path.startswith("file://") else (
-                    path[5:] if path.startswith("file:") else path
-                )
-                with open(local, "rb") as f:
-                    f.seek(off)
-                    data = f.read(ln)
-                yield from parse_warc_bytes(data, warc_file=path)
-
-    yield from _bounded_batches(recs())
+def _range_rows(shard: dict) -> Iterator[tuple]:
+    path = shard["path"]
+    local = path[7:] if path.startswith("file://") else (
+        path[5:] if path.startswith("file:") else path
+    )
+    with open(local, "rb") as f:
+        f.seek(shard["offset"])
+        data = f.read(shard["length"])
+    return _content_rows(data, path)
 
 
 def read_warc_ranges(spark: SparkSession, shards) -> DataFrame:
@@ -364,8 +316,12 @@ def read_warc_ranges(spark: SparkSession, shards) -> DataFrame:
             [(p, int(o), int(ln)) for p, o, ln in shards],
             RANGE_MANIFEST_SCHEMA,
         )
-    return shards.select("path", "offset", "length").mapInArrow(
-        _ranged_kernel, WARC_SCHEMA
+    return map_records(
+        shards.select(F.struct("path", "offset", "length").alias("shard")),
+        [],
+        "shard",
+        _range_rows,
+        WARC_SCHEMA,
     )
 
 
@@ -428,8 +384,6 @@ def read_wet(spark: SparkSession, path: str) -> DataFrame:
     (binaryFile scan -> one Arrow parse stage, no shuffle); the decode
     to string is a JVM-side projection."""
     recs = read_warc(spark, path)
-    from pyspark.sql import functions as F
-
     return recs.where(F.col("rec_type") == "conversion").select(
         "url",
         "warc_ts",
@@ -476,8 +430,6 @@ def write_wet(
     cluster scale ``output_dir`` is a mounted object store; repartition
     upstream to choose the shard count/size."""
     import os
-
-    from pyspark.sql import functions as F
 
     os.makedirs(output_dir, exist_ok=True)
     pruned = df.select(

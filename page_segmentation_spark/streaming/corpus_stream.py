@@ -4,7 +4,7 @@ The streaming twin of ``plans.training_corpus.build_training_corpus``:
 a landing directory of WARC files becomes a continuously-growing,
 already-deduplicated training corpus.
 
-    binaryFile stream -> WARC record parse (mapInArrow)
+    binaryFile stream -> WARC record parse (sources/warc.warc_records)
       -> corpus_features (fused extract + C4 + Gopher + lang/tokens/fp —
          ONE stateless Arrow stage plus projections, zero shuffle)
       -> stateful first-seen dedup keyed by content fingerprint

@@ -102,7 +102,7 @@ def stream_extract_warc(
 ):
     """Incremental extraction straight off a landing directory of WARC
     files (the continuously-running crawl-consumer shape): streaming
-    binaryFile source -> WARC record parse (mapInArrow, no shuffle) ->
+    binaryFile source -> WARC record parse (one Arrow stage, no shuffle) ->
     ``foreachBatch(extract)`` -> append sink.
 
     Each WARC file is consumed exactly once (file-source checkpointing)

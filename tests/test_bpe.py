@@ -83,3 +83,24 @@ def test_spark_kernel(spark):
     exp = bpe.bpe_encode("digits 123 here")
     assert out[3]["n_bpe_tokens"] == len(exp)
     assert out[3]["bpe_preview"] == ",".join(exp[:8])
+
+
+def test_spark_kernel_keeps_key_types(spark):
+    """Key columns keep their input types: a string key other than
+    ``url`` must not be declared (and fail to convert) as long."""
+    from page_segmentation_spark.packaging import ship_package
+
+    ship_package(spark)
+    df = spark.createDataFrame(
+        [("a-1", 7, "Hello world"), ("b-2", 8, None)],
+        "doc_key string, part int, text string",
+    )
+    out = bpe.with_bpe_tokens(df, id_cols=("doc_key", "part"))
+    assert [(f.name, f.dataType.simpleString()) for f in out.schema][:2] == [
+        ("doc_key", "string"),
+        ("part", "int"),
+    ]
+    rows = {r["doc_key"]: r for r in out.collect()}
+    assert rows["a-1"]["part"] == 7
+    assert rows["a-1"]["n_bpe_tokens"] == len(bpe.bpe_encode("Hello world"))
+    assert rows["b-2"]["n_bpe_tokens"] == 0

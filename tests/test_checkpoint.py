@@ -90,3 +90,22 @@ def test_checkpoint_fingerprint_invalidates(spark, tmp_path):
         spark, pages, extract, out, n_buckets=2, fingerprint="v2"
     )
     assert len(s2["completed"]) == 2  # different settings -> recompute
+
+
+def test_checkpoint_rejects_other_bucket_count(spark, tmp_path):
+    """A re-run with another n_buckets must not mix bucketings: the old
+    bucket dirs would stay readable next to the new ones and duplicate
+    urls.  It raises; a same-count re-run still skips every bucket."""
+    import pytest
+
+    out = str(tmp_path / "ckpt4")
+    pages = pages_df(spark, 24, partitions=2).cache()
+    s1 = run_checkpointed(spark, pages, extract, out, n_buckets=2)
+    assert len(s1["completed"]) == 2
+    with pytest.raises(ValueError, match="n_buckets"):
+        run_checkpointed(spark, pages, extract, out, n_buckets=4)
+    result = read_result(spark, out)
+    assert result.count() == 24
+    assert result.select("url").distinct().count() == 24
+    s2 = run_checkpointed(spark, pages, extract, out, n_buckets=2)
+    assert s2["completed"] == [] and s2["skipped"] == [0, 1]

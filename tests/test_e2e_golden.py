@@ -113,3 +113,31 @@ def test_extract_markdown_value_identity_and_plan(spark):
     plan = fresh._jdf.queryExecution().executedPlan().toString()
     assert plan.count("Exchange hashpartitioning") == 1
     assert "BatchEvalPython" not in plan
+
+
+def test_generated_pages_equal_generator_rows(spark):
+    """pages_df / mixed_pages_df rows equal make_page / make_pdf_page,
+    warc_ts included (the generator's naive datetimes are UTC)."""
+    import datetime as dt
+
+    from pyspark.sql import functions as F
+
+    from page_segmentation_spark.datagen import make_pdf_page, mixed_pages_df
+
+    def micros(ts):
+        return (ts - dt.datetime(1970, 1, 1)) // dt.timedelta(microseconds=1)
+
+    cols = ("url", "html", "text", "lang")
+    for df, expect in (
+        (pages_df(spark, 9, partitions=2), make_page),
+        (
+            mixed_pages_df(spark, 9, partitions=2),
+            lambda i: make_pdf_page(i) if i % 4 == 0 else make_page(i),
+        ),
+    ):
+        rows = df.withColumn("ts_us", F.unix_micros("warc_ts")).collect()
+        assert [r["url"] for r in rows] == [expect(i)["url"] for i in range(9)]
+        for i, r in enumerate(rows):
+            want = expect(i)
+            assert tuple(r[c] for c in cols) == tuple(want[c] for c in cols)
+            assert r["ts_us"] == micros(want["warc_ts"])

@@ -198,3 +198,25 @@ def test_catalog_priority_names_unique_and_known():
 
     assert len(_PRIORITY) == len(set(_PRIORITY))
     assert [n for n in _PRIORITY if n not in QUERIES] == []
+
+
+def test_one_arrow_boundary():
+    """records.map_records is the package's only Python-UDF boundary:
+    no other module calls ``mapInArrow``/``mapInPandas`` (the grouped
+    ``applyInPandas*`` operators are a different shape)."""
+    import ast
+    import pathlib
+
+    import page_segmentation_spark
+
+    root = pathlib.Path(page_segmentation_spark.__file__).parent
+    calls = []
+    for path in sorted(root.rglob("*.py")):
+        for node in ast.walk(ast.parse(path.read_text(), str(path))):
+            if (
+                isinstance(node, ast.Call)
+                and isinstance(node.func, ast.Attribute)
+                and node.func.attr in ("mapInArrow", "mapInPandas")
+            ):
+                calls.append(str(path.relative_to(root)))
+    assert calls == ["records.py"]

@@ -75,15 +75,13 @@ def _make_batch(docs):
 
 
 def _run_kernel(batches, k):
+    gram_hashes = D._gram_hasher(k)
     out = []
-    for b in D._gram_hash_kernel(k)(iter(batches)):
-        out.extend(
-            zip(
-                b.column("id").to_pylist(),
-                b.column("pos").to_pylist(),
-                b.column("gh").to_pylist(),
-            )
-        )
+    for b in batches:
+        for id_, words in zip(
+            b.column("id").to_pylist(), b.column("words").to_pylist()
+        ):
+            out.extend((id_, pos, gh) for pos, gh in gram_hashes(words))
     return out
 
 

@@ -180,28 +180,81 @@ def test_fractional_second_warc_dates():
     assert _warc_ts_to_us("not-a-date") is None
 
 
-def test_bounded_batch_flush_preserves_rows(monkeypatch):
+def _warc_arrow_schema():
+    from pyspark.sql.pandas.types import to_arrow_schema
+    from pyspark.sql.types import StructType
+
+    from page_segmentation_spark.sources.warc import WARC_SCHEMA
+
+    return to_arrow_schema(StructType.fromDDL(WARC_SCHEMA))
+
+
+def test_bounded_batch_flush_preserves_rows(spark, monkeypatch):
     """The Arrow kernel must flush bounded RecordBatches (a ~1 GB crawl
     file inflates past the 2 GiB 32-bit binary-array cap if emitted as
     one batch) without changing the row stream."""
     import pyarrow as pa
 
+    from page_segmentation_spark import records as R
     from page_segmentation_spark.sources import warc as W
 
-    recs = list(parse_warc_bytes(build_warc(_recs(10)), warc_file="f"))
-    monkeypatch.setattr(W, "FLUSH_RECORDS", 3)
-    batches = list(W._bounded_batches(iter(recs)))
+    schema = _warc_arrow_schema()
+    rows = list(W._content_rows(build_warc(_recs(10)), "f"))
+    one_each = pa.RecordBatch.from_pydict({"i": list(range(10))})
+
+    def run(inputs):
+        return list(
+            R.record_batches(
+                iter(inputs), [], "i", lambda i: [rows[i]], schema
+            )
+        )
+
+    monkeypatch.setattr(R, "FLUSH_RECORDS", 3)
+    batches = run([one_each])
     assert len(batches) == 4  # 3+3+3+1
     urls = [u for b in batches for u in b.column("url").to_pylist()]
-    assert urls == [r["url"] for r in recs]
-    monkeypatch.setattr(W, "FLUSH_RECORDS", 65536)
-    monkeypatch.setattr(W, "FLUSH_BYTES", 1)  # every record flushes
-    batches = list(W._bounded_batches(iter(recs)))
+    assert urls == [r[0] for r in rows]
+    monkeypatch.setattr(R, "FLUSH_RECORDS", 65536)
+    monkeypatch.setattr(R, "FLUSH_BYTES", 1)  # every record flushes
+    batches = run([one_each])
     assert len(batches) == 10
     # empty input still yields one schema-bearing batch
-    empty = list(W._bounded_batches(iter([])))
+    empty = run([])
     assert len(empty) == 1 and empty[0].num_rows == 0
-    assert empty[0].schema == W._ARROW_SCHEMA
+    assert empty[0].schema == schema
+
+
+def test_flush_inside_one_record_fan_out(spark, monkeypatch):
+    """One WARC file is one input record fanning out into many rows: the
+    flush bounds must cut inside that fan-out, in row order."""
+    import pyarrow as pa
+
+    from page_segmentation_spark import records as R
+    from page_segmentation_spark.sources import warc as W
+
+    schema = _warc_arrow_schema()
+    data = build_warc(_recs(10))
+    expected = [r["url"] for r in parse_warc_bytes(data)]
+    one_file = pa.RecordBatch.from_pydict(
+        {"file": [{"path": "f", "content": data}]}
+    )
+
+    def run():
+        return list(
+            R.record_batches(
+                iter([one_file]), [], "file", W._file_rows, schema
+            )
+        )
+
+    monkeypatch.setattr(R, "FLUSH_RECORDS", 3)
+    batches = run()
+    assert [b.num_rows for b in batches] == [3, 3, 3, 1]
+    assert [u for b in batches for u in b["url"].to_pylist()] == expected
+    monkeypatch.setattr(R, "FLUSH_RECORDS", 65536)
+    monkeypatch.setattr(R, "FLUSH_BYTES", 1)
+    batches = run()
+    assert [b.num_rows for b in batches] == [1] * 10
+    assert [u for b in batches for u in b["url"].to_pylist()] == expected
 
 
 def test_warc_range_shards_byte_identical(spark, tmp_path):

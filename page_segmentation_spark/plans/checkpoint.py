@@ -74,7 +74,8 @@ def _manifest_path(output_dir: str, k: int) -> str:
 def committed_buckets(output_dir: str, fingerprint: str, n_buckets: int) -> List[int]:
     """Buckets whose manifest matches ``fingerprint``.  Raises
     ``ValueError`` when any manifest under ``_progress/`` was written
-    with another bucket count: recomputing cannot repair that, because
+    with another bucket count, or with none (a manifest older than the
+    ``n_buckets`` field): recomputing cannot repair that, because
     ``read_result`` would still read the stale ``bucket=<k>`` directories
     (their urls re-bucket elsewhere, so rows would duplicate)."""
     progress = os.path.join(output_dir, "_progress")
@@ -88,10 +89,16 @@ def committed_buckets(output_dir: str, fingerprint: str, n_buckets: int) -> List
                 m = json.load(f)
         except (json.JSONDecodeError, OSError):
             continue  # partial/corrupt manifest -> recompute bucket
-        if m.get("n_buckets") != n_buckets:
+        if "n_buckets" not in m:
+            raise ValueError(
+                f"{output_dir}/_progress/{name} records no n_buckets (it "
+                "predates bucket-count manifests), so its bucketing cannot "
+                "be checked; rerun into a new output directory"
+            )
+        if m["n_buckets"] != n_buckets:
             raise ValueError(
                 f"{output_dir} was checkpointed with n_buckets="
-                f"{m.get('n_buckets')}, not {n_buckets}; write to a new "
+                f"{m['n_buckets']}, not {n_buckets}; write to a new "
                 "output directory"
             )
         if m.get("fingerprint") == fingerprint:

@@ -13,16 +13,16 @@ lib/dataset.py:160-198).
 
 ``mapInArrow`` (not ``mapInPandas``): no pandas round trip on either
 side of the worker, and a Python ``None`` becomes SQL NULL with no dtype
-inference.  Output is columnar — each record's rows are transposed once
-and appended to per-column lists — and bounded: a RecordBatch is flushed
-every ``FLUSH_RECORDS`` rows or ``FLUSH_BYTES`` of string/binary
-payload, also in the middle of one record's fan-out (one WARC file
-inflates to many GB of records).
+inference.  Output is columnar — each row's values are appended to
+per-column lists — and bounded: a RecordBatch is flushed every
+``FLUSH_RECORDS`` rows or ``FLUSH_BYTES`` of string/binary payload,
+checked after every row, so also in the middle of one record's fan-out
+(one WARC file inflates to many GB of records).
 """
 
 from __future__ import annotations
 
-from itertools import islice, repeat
+from itertools import repeat
 from typing import Callable, Iterable, Iterator, Sequence
 
 import pyarrow as pa
@@ -48,15 +48,15 @@ def record_batches(
     arrow_schema: pa.Schema,
 ) -> Iterator[pa.RecordBatch]:
     """The kernel :func:`map_records` runs: ``fn(value)`` per input row,
-    its rows prefixed by the row's ``key_cols`` values, emitted as
-    ``arrow_schema`` RecordBatches bounded by the flush constants.
+    each of its rows prefixed by the row's ``key_cols`` values and
+    appended to per-column lists, emitted as ``arrow_schema``
+    RecordBatches.
 
-    ``fn``'s rows are taken in slices: one row while no payload size is
-    known, then as many as the running mean payload per row says fit in
-    what is left of ``FLUSH_BYTES`` (and of ``FLUSH_RECORDS``).  Every
-    input batch's rows are flushed before the next is read; an input
-    that yields no row at all still yields one empty, schema-bearing
-    batch."""
+    The bounds are checked after every row, so a batch holds at most
+    ``FLUSH_RECORDS`` rows and exceeds ``FLUSH_BYTES`` by at most its
+    last row.  Every input batch's rows are flushed before the next is
+    read; an input that yields no row at all still yields one empty,
+    schema-bearing batch."""
     max_rows, max_bytes = FLUSH_RECORDS, FLUSH_BYTES
     n_keys = len(key_cols)
     sized = [
@@ -67,9 +67,9 @@ def record_batches(
     key_sized = [i for i in sized if i < n_keys]
     val_sized = [i - n_keys for i in sized if i >= n_keys]
     cols: list[list] = [[] for _ in arrow_schema]
-    key_exts = [c.extend for c in cols[:n_keys]]
-    val_exts = [c.extend for c in cols[n_keys:]]
-    n_rows = n_bytes = seen_rows = seen_bytes = 0
+    key_apps = [c.append for c in cols[:n_keys]]
+    val_apps = [c.append for c in cols[n_keys:]]
+    n_rows = n_bytes = 0
     emitted = False
 
     def flush() -> pa.RecordBatch:
@@ -93,36 +93,18 @@ def record_batches(
         values = batch.column(value_col).to_pylist()
         for ids, value in zip(keys, values):
             key_bytes = sum(len(ids[i] or "") for i in key_sized)
-            rows = iter(fn(value))
-            while True:
-                room = max_rows - n_rows
-                if not seen_rows:
-                    step = 1
-                elif not seen_bytes:
-                    step = room
-                else:
-                    budget = (max_bytes - n_bytes) * seen_rows // seen_bytes
-                    step = max(1, min(room, budget))
-                chunk = list(islice(rows, step))
-                if not chunk:
-                    break
-                n = len(chunk)
-                for ext, k in zip(key_exts, ids):
-                    ext(repeat(k, n))
-                out_cols = list(zip(*chunk))
-                for ext, c in zip(val_exts, out_cols):
-                    ext(c)
-                size = key_bytes * n + sum(
-                    sum(map(len, filter(None, out_cols[i]))) for i in val_sized
-                )
-                n_rows += n
-                n_bytes += size
-                seen_rows += n
-                seen_bytes += size
+            for row in fn(value):
+                for app, k in zip(key_apps, ids):
+                    app(k)
+                for app, v in zip(val_apps, row):
+                    app(v)
+                n_rows += 1
+                n_bytes += key_bytes
+                for i in val_sized:
+                    if row[i]:
+                        n_bytes += len(row[i])
                 if n_rows >= max_rows or n_bytes >= max_bytes:
                     yield flush()
-                if n < step:
-                    break
         if n_rows:
             yield flush()
     if not emitted:

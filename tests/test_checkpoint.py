@@ -4,6 +4,7 @@ import os
 
 from page_segmentation_spark.datagen import pages_df
 from page_segmentation_spark.plans.checkpoint import (
+    committed_buckets,
     read_result,
     run_checkpointed,
 )
@@ -109,3 +110,20 @@ def test_checkpoint_rejects_other_bucket_count(spark, tmp_path):
     assert result.select("url").distinct().count() == 24
     s2 = run_checkpointed(spark, pages, extract, out, n_buckets=2)
     assert s2["completed"] == [] and s2["skipped"] == [0, 1]
+
+
+def test_checkpoint_without_recorded_bucket_count_raises(tmp_path):
+    """A manifest that records no n_buckets (written before the field
+    existed) cannot be checked against the requested count: resuming
+    raises and names the manifest rather than guessing."""
+    import json
+
+    import pytest
+
+    progress = tmp_path / "_progress"
+    os.makedirs(progress)
+    (progress / "bucket=0.json").write_text(
+        json.dumps({"bucket": 0, "fingerprint": "f"})
+    )
+    with pytest.raises(ValueError, match="bucket=0.json records no n_buckets"):
+        committed_buckets(str(tmp_path), "f", 2)

@@ -257,6 +257,53 @@ def test_flush_inside_one_record_fan_out(spark, monkeypatch):
     assert [u for b in batches for u in b["url"].to_pylist()] == expected
 
 
+def test_flush_bytes_hold_after_small_first_record(spark, monkeypatch):
+    """A file that opens with a tiny record (a redirect) and goes on with
+    large ones: no batch may exceed ``FLUSH_BYTES`` by more than one row,
+    whatever the sizes seen before."""
+    import pyarrow as pa
+
+    from page_segmentation_spark import records as R
+    from page_segmentation_spark.sources import warc as W
+
+    schema = _warc_arrow_schema()
+    tiny = {"url": "https://w.test/r", "ts": TS, "body": b"x"}
+    large = [
+        {"url": f"https://w.test/{i}", "ts": TS, "body": b"y" * 10_000}
+        for i in range(20)
+    ]
+    data = build_warc([tiny] + large)
+    rows = list(W._content_rows(data, "f"))
+    sized = [
+        i
+        for i, f in enumerate(schema)
+        if pa.types.is_string(f.type) or pa.types.is_binary(f.type)
+    ]
+
+    def payload(vals):
+        return sum(len(vals[i]) for i in sized if vals[i])
+
+    biggest = max(payload(r) for r in rows)
+    monkeypatch.setattr(R, "FLUSH_BYTES", 3 * biggest)
+    one_file = pa.RecordBatch.from_pydict(
+        {"file": [{"path": "f", "content": data}]}
+    )
+    batches = list(
+        R.record_batches(iter([one_file]), [], "file", W._file_rows, schema)
+    )
+    assert len(batches) > 1
+    for b in batches:
+        cols = b.to_pydict()
+        size = sum(
+            payload([cols[f.name][j] for f in schema])
+            for j in range(b.num_rows)
+        )
+        assert size < R.FLUSH_BYTES + biggest
+    assert [u for b in batches for u in b["url"].to_pylist()] == [
+        r[0] for r in rows
+    ]
+
+
 def test_warc_range_shards_byte_identical(spark, tmp_path):
     """A manifest of byte-range shards (each starting on a gzip-member
     boundary) must reproduce the whole-file read exactly — the scale
